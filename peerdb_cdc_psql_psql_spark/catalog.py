@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from . import fs
+
 FIXTURE_TABLES = (
     "region",
     "nation",
@@ -206,10 +208,11 @@ def _pin_session(spark: SparkSession) -> None:
 # nanos/µs generation drift keeps dispatching on what actually
 # arrived), so later loads pass it explicitly and skip the footer
 # read. Never caches data; results always compute from the files.
-# Staleness bound: a process that overwrites a fixture path with a
-# DIFFERENT schema mid-run would read wrong — the fixtures are
-# deterministic per directory, and tests write to fresh tmp dirs.
-_SCHEMA_MEMO: dict[tuple[str, str], T.StructType] = {}
+# Staleness: keyed on the path's length and mtime (``fs.stamp``,
+# filesystem metadata only — no footer read), the same immutable-file
+# identity rule as the WAL footer memo in streaming/workload.py, so a
+# fixture overwritten in place with a different schema is re-read.
+_SCHEMA_MEMO: dict[tuple[str, tuple[int, int] | None], T.StructType] = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -220,7 +223,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown fixture table: {name}")
     _pin_session(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = (sf_dir, name)
+    key = (path, fs.stamp(spark, path))
     sch = _SCHEMA_MEMO.get(key)
     if sch is None:
         sch = spark.read.parquet(path).schema  # one footer read

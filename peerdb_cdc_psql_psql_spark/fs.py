@@ -43,32 +43,52 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
     return bool(fs.rename(jsrc, jvm.org.apache.hadoop.fs.Path(dst)))
 
 
-def list_dirs(spark: SparkSession, path: str) -> list[str]:
-    """Immediate subdirectory NAMES under ``path`` (empty if the dir
-    doesn't exist) — used by cache-eviction sweeps over the warehouse."""
-    fs, _, jpath = _fs(spark, path)
-    if not fs.exists(jpath):
-        return []
-    return [
-        st.getPath().getName()
-        for st in fs.listStatus(jpath)
-        if st.isDirectory()
-    ]
-
-
-def list_files(spark: SparkSession, path: str, suffix: str = "") -> list[str]:
-    """Data files directly under ``path`` (commit markers like _SUCCESS
-    and hidden files excluded). Empty list if the dir doesn't exist."""
+def _data_file_statuses(spark: SparkSession, path: str):
+    """``(FileStatus, qualified path)`` of the data files directly
+    under ``path`` (commit markers like _SUCCESS and hidden files
+    excluded — the files Spark's own readers see). Empty if the dir
+    doesn't exist."""
     fs, _, jpath = _fs(spark, path)
     if not fs.exists(jpath):
         return []
     out = []
     for st in fs.listStatus(jpath):
-        p = st.getPath()
-        name = p.getName()
-        if st.isFile() and not name.startswith(("_", ".")) and name.endswith(suffix):
-            out.append(p.toString())
+        if not st.isFile():
+            continue
+        p = st.getPath().toString()
+        if not p.rsplit("/", 1)[-1].startswith(("_", ".")):
+            out.append((st, p))
     return out
+
+
+def list_files(spark: SparkSession, path: str, suffix: str = "") -> list[str]:
+    """Data files directly under ``path`` (commit markers like _SUCCESS
+    and hidden files excluded). Empty list if the dir doesn't exist."""
+    return [p for _, p in _data_file_statuses(spark, path) if p.endswith(suffix)]
+
+
+def list_file_stats(spark: SparkSession, path: str) -> list[tuple[str, int, int]]:
+    """``(path, length, mtime_ms)`` of the data files directly under
+    ``path`` — the identity of an immutable file, for memos keyed on
+    it. Empty list if the dir doesn't exist."""
+    return [
+        (p, int(st.getLen()), int(st.getModificationTime()))
+        for st, p in _data_file_statuses(spark, path)
+    ]
+
+
+def stamp(spark: SparkSession, path: str) -> tuple[int, int] | None:
+    """``(length, mtime_ms)`` of a file, or of a directory's whole
+    content (total bytes under it, the dir's own mtime); None if the
+    path doesn't exist. Rewriting the path in place changes it."""
+    fs, _, jpath = _fs(spark, path)
+    if not fs.exists(jpath):
+        return None
+    st = fs.getFileStatus(jpath)
+    length = (
+        fs.getContentSummary(jpath).getLength() if st.isDirectory() else st.getLen()
+    )
+    return int(length), int(st.getModificationTime())
 
 
 def mtime_ms(spark: SparkSession, path: str) -> int | None:
@@ -120,21 +140,31 @@ def read_text(spark: SparkSession, path: str) -> str | None:
         stream.close()
 
 
-def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
+def write_bytes_atomic(spark: SparkSession, path: str, data: bytes) -> None:
     """Write-tmp-then-rename: readers see either the old or the new
-    content, never a torn write. HDFS rename won't clobber, so the old
-    file is deleted first — the instant where the path is absent is
-    covered by callers' fallback resolution (e.g. highest base_v*)."""
+    content, never a torn write. The temp file is dot-prefixed, so
+    directory readers (batch and streaming file sources list every
+    non-hidden file) never pick it up mid-write. HDFS rename won't
+    clobber, so an existing file is deleted first — the instant where
+    the path is absent is covered by callers' fallback resolution
+    (e.g. highest base_v*)."""
     fs, jvm, jpath = _fs(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp")
+    tmp = jvm.org.apache.hadoop.fs.Path(jpath.getParent(), f".{jpath.getName()}.tmp")
     out = fs.create(tmp, True)
     try:
-        out.write(bytearray(text.encode("utf-8")))
+        out.write(bytearray(data))
     finally:
         out.close()
     if fs.exists(jpath):
         fs.delete(jpath, False)
-    fs.rename(tmp, jpath)
+    if not fs.rename(tmp, jpath):
+        fs.delete(tmp, False)
+        raise OSError(f"rename to {path} failed")
+
+
+def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
+    """UTF-8 text through ``write_bytes_atomic``."""
+    write_bytes_atomic(spark, path, text.encode("utf-8"))
 
 
 def sweep_gc_manifest(spark: SparkSession, manifest_path: str) -> list[str]:

@@ -401,6 +401,11 @@ def _merge_batch(
     the delta log. Replays append identical content, which compaction
     collapses — idempotent (C7).
 
+    Only the tables PRESENT in the batch are merged: one distinct-
+    ``table`` job over the persisted batch (which also fills the
+    persist) picks them, and a table with no events this trigger gets
+    no job and no empty delta file.
+
     Multi-table mirrors submit the per-table merge jobs CONCURRENTLY
     (thread pool — Spark job submission is thread-safe): a 50-table
     mirror would otherwise serialize 50 small write jobs per
@@ -477,10 +482,11 @@ def _merge_batch(
             latest = _merged_state(_with_meta(tdf, tm), tm, drop_lsn=False)
             latest.write.mode("append").parquet(_delta_dir(target_root, tm))
 
-        tms = list(mirror.tables.values())
+        present = {r[0] for r in batch_df.select("table").distinct().collect()}
+        tms = [tm for tm in mirror.tables.values() if tm.source_table in present]
         if len(tms) == 1:
             merge_one(tms[0])
-        else:
+        elif tms:
             with ThreadPoolExecutor(max_workers=min(8, len(tms))) as pool:
                 for f in [pool.submit(merge_one, tm) for tm in tms]:
                     f.result()  # propagate the first failure

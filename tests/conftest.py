@@ -16,6 +16,25 @@ def spark():
     yield spark
 
 
+def count_jobs(spark, fn):
+    """Run ``fn()`` and return ``(result, n)``, where ``n`` is the
+    number of Spark jobs it launched from this thread (counted under a
+    fresh job group through the status tracker, so it works with the
+    UI disabled)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
