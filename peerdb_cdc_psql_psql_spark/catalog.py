@@ -208,11 +208,11 @@ def _pin_session(spark: SparkSession) -> None:
 # nanos/µs generation drift keeps dispatching on what actually
 # arrived), so later loads pass it explicitly and skip the footer
 # read. Never caches data; results always compute from the files.
-# Staleness: keyed on the path's length and mtime (``fs.stamp``,
-# filesystem metadata only — no footer read), the same immutable-file
-# identity rule as the WAL footer memo in streaming/workload.py, so a
-# fixture overwritten in place with a different schema is re-read.
-_SCHEMA_MEMO: dict[tuple[str, tuple[int, int] | None], T.StructType] = {}
+# Staleness: keyed on the path's mtime (``fs.mtime_ms``, one stat, no
+# footer read). Overwriting a fixture — a Spark overwrite, or files
+# renamed into its dir — changes that mtime, so a fixture rewritten in
+# place with a different schema is re-read.
+_SCHEMA_MEMO: dict[tuple[str, int | None], T.StructType] = {}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -223,7 +223,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown fixture table: {name}")
     _pin_session(spark)
     path = f"{sf_dir}/{name}.parquet"
-    key = (path, fs.stamp(spark, path))
+    key = (path, fs.mtime_ms(spark, path))
     sch = _SCHEMA_MEMO.get(key)
     if sch is None:
         sch = spark.read.parquet(path).schema  # one footer read

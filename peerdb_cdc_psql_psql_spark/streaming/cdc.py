@@ -401,10 +401,12 @@ def _merge_batch(
     the delta log. Replays append identical content, which compaction
     collapses — idempotent (C7).
 
-    Only the tables PRESENT in the batch are merged: one distinct-
-    ``table`` job over the persisted batch (which also fills the
-    persist) picks them, and a table with no events this trigger gets
-    no job and no empty delta file.
+    A multi-table mirror merges only the tables PRESENT in the batch:
+    one distinct-``table`` job over the persisted batch (which also
+    fills the persist) picks them, and a table with no events this
+    trigger gets no job and no empty delta file. A single-table mirror
+    skips that job and merges its table directly — there is nothing
+    to skip, and its one merge job fills the persist.
 
     Multi-table mirrors submit the per-table merge jobs CONCURRENTLY
     (thread pool — Spark job submission is thread-safe): a 50-table
@@ -482,8 +484,12 @@ def _merge_batch(
             latest = _merged_state(_with_meta(tdf, tm), tm, drop_lsn=False)
             latest.write.mode("append").parquet(_delta_dir(target_root, tm))
 
-        present = {r[0] for r in batch_df.select("table").distinct().collect()}
-        tms = [tm for tm in mirror.tables.values() if tm.source_table in present]
+        tms = list(mirror.tables.values())
+        if len(tms) > 1:
+            # one small job (it also fills the persist) so tables the
+            # batch never touched get no merge job and no empty delta
+            present = {r[0] for r in batch_df.select("table").distinct().collect()}
+            tms = [tm for tm in tms if tm.source_table in present]
         if len(tms) == 1:
             merge_one(tms[0])
         elif tms:
@@ -613,7 +619,9 @@ def read_target(
     """Compact-on-read view of a mirrored target table: base ∪ deltas,
     one row per key at max LSN, soft-deleted rows flagged (visible, as
     in images/cdc_orders.png) or dropped when ``include_deleted=False``
-    (hard-delete mode, Soft Delete toggle off)."""
+    (hard-delete mode, Soft Delete toggle off). A target with no
+    snapshot and no applied change yet reads as empty, as the
+    reference's target table exists from CREATE MIRROR on."""
     tm = mirror.tables[source_table]
     base_dir = _resolve_base_dir(spark, _table_dir(target_root, tm))
     delta_dir = _delta_dir(target_root, tm)
@@ -633,7 +641,10 @@ def read_target(
             continue  # dir exists but holds no data files yet
         parts.append(spark.read.option("mergeSchema", "true").parquet(d))
     if not parts:
-        raise FileNotFoundError(f"no target data under {target_root}")
+        # No snapshot and no change has reached this table yet: the
+        # declared target reads as empty, in the shape a merge writes.
+        empty = spark.createDataFrame([], CDC_EVENT_SCHEMA)
+        parts.append(_merged_state(_with_meta(empty, tm), tm, drop_lsn=False))
     allrows = parts[0]
     for p in parts[1:]:
         allrows = allrows.unionByName(p, allowMissingColumns=True)

@@ -313,12 +313,30 @@ def _advance_counter(key: str, floor: int) -> None:
 _FOOTER_MAX: dict[str, dict[tuple[str, int, int], int]] = {}
 
 
-def _file_max_lsn(spark: SparkSession, path: str) -> int:
-    """MAX(lsn) of one WAL file from its parquet footer, read by
+def _local_footer_max(path: str) -> int | None:
+    """MAX(lsn) of one local WAL file (a ``file:`` path) from its
+    parquet footer statistics, read by pyarrow in the driver; None
+    when a non-empty row group has no ``lsn`` statistics."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path[len("file:"):])
+    best = 0
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        if rg.num_rows == 0:
+            continue
+        cols = [rg.column(c) for c in range(rg.num_columns)]
+        stats = next((c.statistics for c in cols if c.path_in_schema == "lsn"), None)
+        if stats is None or not stats.has_min_max:
+            return None
+        best = max(best, stats.max)
+    return best
+
+
+def _jvm_footer_max(spark: SparkSession, path: str) -> int | None:
+    """``_local_footer_max`` for any Hadoop path: the footer is read by
     parquet-mr in the JVM through the Hadoop FileSystem (cluster-safe
-    for ``file:``/``hdfs:``/``s3a:``). A row group without ``lsn``
-    statistics (a writer that disabled them) falls back to reading
-    that one file's ``lsn`` column."""
+    for ``hdfs:``/``s3a:``), at a few py4j round trips per row group."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     jfile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
@@ -342,14 +360,26 @@ def _file_max_lsn(spark: SparkSession, path: str) -> int:
                     stats = col.getStatistics()
                     break
             if stats is None or stats.isEmpty() or not stats.hasNonNullValue():
-                break  # no usable statistics: read the column instead
+                return None
             best = max(best, int(stats.genericGetMax()))
-        else:
-            return best
+        return best
     finally:
         reader.close()
-    row = spark.read.schema(CDC_EVENT_SCHEMA).parquet(path).agg(F.max("lsn")).first()
-    return row[0] or 0
+
+
+def _file_max_lsn(spark: SparkSession, path: str) -> int:
+    """MAX(lsn) of one WAL file from its parquet footer: pyarrow for a
+    local file (no JVM round trip), parquet-mr for other schemes. A
+    row group without ``lsn`` statistics (a writer that disabled them)
+    falls back to reading that one file's ``lsn`` column."""
+    if path.startswith("file:"):
+        best = _local_footer_max(path)
+    else:
+        best = _jvm_footer_max(spark, path)
+    if best is None:
+        row = spark.read.schema(CDC_EVENT_SCHEMA).parquet(path).agg(F.max("lsn")).first()
+        best = row[0] or 0
+    return best
 
 
 def _footer_max_lsn(spark: SparkSession, key: str) -> int:
@@ -370,11 +400,13 @@ def allocate_lsns(spark: SparkSession, event_dir: str, n: int) -> int:
     cross-process by the fcntl-locked ``.lsn.next`` counter file
     under the WAL dir.
 
-    The MAX(lsn) disk read (``_footer_max_lsn``) lists the WAL through
-    the Hadoop FileSystem and reads parquet footer statistics only,
-    through parquet-mr in the JVM; each file's max is memoized by
-    (path, length, mtime), so a warm allocation reads just the files
-    landed since the last one and launches no Spark job.
+    The MAX(lsn) disk read (``_footer_max_lsn``) lists the WAL with
+    ``fs.list_file_stats`` and reads parquet footer statistics only
+    (pyarrow for a local WAL, parquet-mr in the JVM for other
+    schemes); each file's max is memoized by (path, length, mtime), so
+    a warm allocation reads just the files landed since the last one
+    and launches no Spark job. On a local WAL neither step costs a JVM
+    round trip per file.
 
     ``spark=None`` skips the disk read (counter + cache only) — for
     lightweight allocators in processes that cooperate through this

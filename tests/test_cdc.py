@@ -1292,6 +1292,87 @@ def test_allocate_lsns_reads_past_file_without_statistics(spark, tmp_path):
     assert _wl.allocate_lsns(spark, wal, 1) == 96
 
 
+def test_footer_readers_agree_local_and_jvm(spark, tmp_path):
+    """The local (pyarrow) and JVM (parquet-mr, used for non-local
+    schemes) footer readers give the same MAX(lsn) for a file with
+    statistics, and both report a file without them as None."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from peerdb_cdc_psql_psql_spark import fs
+    from peerdb_cdc_psql_psql_spark.streaming import workload as _wl
+
+    tbl = pa.table({"lsn": pa.array([7, 42, 3], pa.int64()), "x": ["a", "b", "c"]})
+    d = tmp_path / "f"
+    d.mkdir()
+    pq.write_table(tbl, str(d / "with.parquet"), row_group_size=2)
+    pq.write_table(tbl, str(d / "without.parquet"), write_statistics=False)
+    paths = {p.rsplit("/", 1)[-1]: p for p in fs.list_files(spark, str(d))}
+    assert _wl._local_footer_max(paths["with.parquet"]) == 42
+    assert _wl._jvm_footer_max(spark, paths["with.parquet"]) == 42
+    assert _wl._local_footer_max(paths["without.parquet"]) is None
+    assert _wl._jvm_footer_max(spark, paths["without.parquet"]) is None
+
+
+def test_local_listing_matches_spark_listing(spark, tmp_path):
+    """``fs.list_file_stats`` lists a local dir in Python; it returns
+    what Hadoop's own listing gives — the same qualified path strings,
+    lengths and mtimes — with hidden and underscore files excluded."""
+    import os
+
+    from peerdb_cdc_psql_psql_spark import fs
+
+    d = str(tmp_path / "wal dir")
+    spark.range(3).repartition(2).write.parquet(d)
+    open(os.path.join(d, ".hidden.parquet"), "w").close()
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(d)
+    hadoop = sorted(
+        (st.getPath().toString(), st.getLen(), st.getModificationTime())
+        for st in jpath.getFileSystem(spark._jsc.hadoopConfiguration()).listStatus(jpath)
+        if not st.getPath().getName().startswith(("_", "."))
+    )
+    assert len(hadoop) == 2
+    assert sorted(fs.list_file_stats(spark, d + "/")) == hadoop
+    assert fs.list_file_stats(spark, str(tmp_path / "missing")) == []
+
+
+def test_eventless_table_reads_empty_and_reports_synced(spark, tmp_path):
+    """A mapped table that never got an event (and no snapshot) has no
+    target files; it still reads as an empty target in the merged
+    shape, and the lag report counts it as 0 rows, SYNCED against an
+    empty source."""
+    m = Mirror(
+        name="eventless",
+        tables={
+            t: TableMapping(t, f"{t}_cdc", DEMO_SCHEMAS[t], "id")
+            for t in ("orders", "customers")
+        },
+    )
+    event_dir, tgt, ckpt = (
+        str(tmp_path / "wal"), str(tmp_path / "tgt"), str(tmp_path / "ckpt")
+    )
+    empty = read_target(spark, m, "customers", tgt)
+    assert empty.collect() == []
+    orders = workload.generate_order_events(random.Random(3), 1, 1, 10, [1], [1])
+    workload.append_events(spark, orders, event_dir)
+    _run_drain(spark, m, event_dir, tgt, ckpt)
+    assert not (tmp_path / "tgt" / "customers_cdc").exists()
+    got = read_target(spark, m, "customers", tgt)
+    assert got.collect() == []
+    assert got.columns == [
+        *m.tables["customers"].selected(), "_is_deleted", "_synced_at"
+    ]
+    sources = {
+        "orders": read_target(spark, m, "orders", tgt).filter(~F.col("_is_deleted")),
+        "customers": got,
+    }
+    report = {
+        r["table_name"]: (r["tgt_rows"], r["sync_status"])
+        for r in mirror_lag_report(spark, m, sources, tgt).collect()
+    }
+    assert report == {"orders": (10, "SYNCED"), "customers": (0, "SYNCED")}
+
+
 def test_append_events_round_trips_events_df(spark, tmp_path):
     """The driver-written WAL file reads back equal to ``events_df``
     over the same tuples on all six columns — commit_ts as the same

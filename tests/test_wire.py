@@ -293,6 +293,40 @@ def test_psql_mirror_ddl_cycle(server, spark, tmp_path):
     assert r.returncode == 0 and "wiremirror" not in r.stdout
 
 
+@pytest.mark.skipif(psql_missing, reason="psql client not installed")
+def test_psql_mirror_eventless_table_selects_empty(server, spark, tmp_path):
+    """A three-table mirror whose WAL only ever carried orders events:
+    the tables with no change (and no snapshot) still SELECT over the
+    wire as empty targets instead of 'table not found'."""
+    r = _psql(
+        server.port,
+        "CREATE MIRROR threetbl WITH TABLE MAPPING (orders:orders_cdc, "
+        "customers:customers_cdc, products:products_cdc) "
+        "WITH (soft_delete = true, key_column = 'id')",
+    )
+    assert r.returncode == 0, r.stderr
+    from peerdb_cdc_psql_psql_spark.operators.sql_frontend import _DDL_MIRRORS
+    from peerdb_cdc_psql_psql_spark.streaming.cdc import read_target
+
+    deadline = time.time() + 120
+    n = 0
+    while time.time() < deadline:
+        n = read_target(
+            spark, _DDL_MIRRORS["threetbl"], "orders", str(tmp_path / "tgt")
+        ).count()
+        if n == 2:
+            break
+        time.sleep(1)
+    assert n == 2
+    r = _psql(server.port, "SELECT count(*) FROM customers_cdc")
+    assert r.returncode == 0, r.stderr
+    assert r.stdout.strip() == "0"
+    r = _psql(server.port, "SELECT count(*) FROM orders_cdc")
+    assert r.returncode == 0 and r.stdout.strip() == "2", r.stderr
+    r = _psql(server.port, "DROP MIRROR threetbl")
+    assert r.returncode == 0, r.stderr
+
+
 # -- raw-socket protocol helpers (hand-rolled client) -----------------
 
 import socket as _sk
