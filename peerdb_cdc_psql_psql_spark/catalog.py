@@ -173,8 +173,9 @@ DEMO_PRIMARY_KEYS = {"customers": "id", "products": "id", "orders": "id"}
 # so a recycled id can never skip a NEW session's pin). Re-pinning on
 # every load cost 3 py4j conf.set round trips ≈ 5.5 ms per call,
 # ~4 s per bench run across ~700 loads (r14). Nothing in the engine
-# unsets these confs mid-session; a caller that does must use a fresh
-# session (or clear this set) before loading again.
+# unsets these confs mid-session. The session timezone is the one a
+# caller plausibly changes (and a wrong one silently shifts timestamp
+# results), so the fast path re-reads it: one conf.get per load.
 import weakref
 
 _PINNED_SESSIONS: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
@@ -191,6 +192,8 @@ def _pin_session(spark: SparkSession) -> None:
     (PARQUET_TYPE_ILLEGAL); we read it as long and convert below.
     """
     if spark in _PINNED_SESSIONS:
+        if spark.conf.get("spark.sql.session.timeZone") != "UTC":
+            spark.conf.set("spark.sql.session.timeZone", "UTC")
         return
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

@@ -4686,7 +4686,7 @@ def decode_any(payload: bytes) -> dict:
     schema: (fmt, kind, ok, width, height, n_channels, n_frames,
     n_samples, sample_rate). Container-only work for video (frame
     DIRECTORY from the demux, no per-frame pixel decode — the bulk
-    stage for that is sample_video_frames). Unknown or corrupt
+    path for that is multimodal_video_frame_sample). Unknown or corrupt
     payloads return ok=False rather than raising: at corpus scale a
     foreign blob must degrade to a row, not kill the task."""
     fmt = sniff_format(payload)

@@ -3,16 +3,19 @@ audio/video as opaque binary columns + typed metadata structs, with
 decode / feature-extract / frame-sample as Arrow-batched Pandas
 transforms over ``mapInPandas``.
 
-Real codecs: RIFF/WAVE PCM, uncompressed 24-bit BMP, DIB AVI (r5),
-and zlib-compressed PNG (r6) need no media libraries —
-``functions/codecs.py`` parses the actual container bytes (chunk
-walk, stride padding, bottom-up rows, PNG scanline filter
-reconstruction), and ``decode_audio`` / ``decode_image`` /
-``decode_pngs`` / ``resize_images`` run them executor-side over
-Arrow batches. JPEG/MP4/MJPG (DCT-compressed) still raise
-``NotImplementedError`` (no codec libs in this container —
-sanctioned); ``decode_media`` keeps the deterministic fake decoder
-for format-agnostic byte-stat plumbing.
+Real codecs: every ``codec``-tagged query here is a byte-level round
+trip through the pure-Python codecs in ``functions/codecs.py`` —
+WAV / G.711 / IMA ADPCM / FLAC audio, BMP / PNG / GIF / JPEG (baseline,
+progressive, 4:2:0, CMYK, EXIF) / TIFF / WebP images, and DIB AVI,
+Motion-JPEG AVI and MP4 video; no media library is needed. Each one
+is a per-id row function handed to ``_round_trip``: the manifest
+filtered to one media type and id range, then ONE ``mapInPandas``
+that builds the id's deterministic fixture, encodes it, decodes it
+back and emits the decoded stats, so a payload never crosses the
+JVM↔Python boundary. The oracles recompute those stats in closed
+form. ``decode_media`` keeps the deterministic fake decoder for
+format-agnostic byte-stat plumbing, plus the real sniffing decoder
+(``codecs.decode_any``).
 
 Scale: binary payloads ride parquet natively; metadata-only queries
 never touch the blob column (columnar projection), and the Pandas
@@ -22,8 +25,10 @@ per-partition, no driver collects.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import struct
+from collections.abc import Callable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -239,168 +244,77 @@ def multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Real codecs (r5): WAV / BMP payload synthesis + typed decode stages
+# Real codecs: one encode → decode round trip per media id
 # ---------------------------------------------------------------------------
 
-_AUDIO_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-        T.StructField("peak", T.IntegerType()),
-        T.StructField("mean_abs", T.IntegerType()),
-    ]
-)
 
-_IMAGE_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_pixels", T.IntegerType()),
-        T.StructField("mean_r", T.IntegerType()),
-        T.StructField("mean_g", T.IntegerType()),
-        T.StructField("mean_b", T.IntegerType()),
-    ]
-)
-
-_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
+def _schema(cols: str) -> T.StructType:
+    """Output schema from space-separated ``name`` or ``name:type``
+    tokens (type ``string`` or ``boolean``); an untyped column is
+    bigint."""
+    types = {"string": T.StringType(), "boolean": T.BooleanType()}
+    return T.StructType(
+        [
+            T.StructField(name, types[t[0]] if t else T.LongType())
+            for name, *t in (c.split(":") for c in cols.split())
+        ]
+    )
 
 
-def synthesize_wav_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side WAV synthesis: a square wave whose amplitude and
-    length are exact integer functions of media_id — amplitude
-    (id % 320)·100, frames 800 + (id % 10)·160 at 16 kHz. A square
-    wave's peak and mean absolute amplitude both equal the amplitude,
-    so the decoded stats are SQL-derivable and the driver oracle can
-    check the REAL byte-level codec path end to end."""
+def _round_trip(
+    spark: SparkSession,
+    sf_dir: str,
+    media_type: str,
+    ids: range,
+    schema: T.StructType,
+    rows_for: Callable[[int], list[dict]],
+) -> DataFrame:
+    """A codec query: the manifest's ``media_type`` rows whose
+    ``media_id`` lies in ``ids``, through ONE ``mapInPandas``.
+    ``rows_for(m)`` builds media id ``m``'s fixture, encodes and
+    decodes it, and returns its output rows as mappings from column
+    name to value (a decoder's result dict usually is one); the batch
+    loop prepends ``media_id`` and emits ``schema``'s columns in order.
 
-    from ..functions.codecs import encode_wav_pcm16
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                amp = int(mid) % 320 * 100
-                n = 800 + int(mid) % 10 * 160
-                wave_ = np.tile([amp, -amp], (n + 1) // 2)[:n]
-                payloads.append(encode_wav_pcm16(wave_, 16000))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-def synthesize_bmp_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side BMP synthesis: a solid-color 24-bit image with
-    ODD width (id % 8)·4 + 5 — odd widths force nonzero row stride
-    padding, the part naive BMP readers get wrong — height
-    (id % 4) + 2, and channel values exact mod-functions of id."""
-
-    from ..functions.codecs import encode_bmp24
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[..., 0], px[..., 1], px[..., 2] = (
-                    m % 256, m * 7 % 256, m * 13 % 256,
-                )
-                payloads.append(encode_bmp24(px))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-def synthesize_png_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side PNG synthesis: a GRADIENT image (red rises with
-    x, green with y, blue solid — all exact mod-functions of id kept
-    below the 8-bit wrap) written through the real zlib+filter
-    encoder with filter type ``y % 5``, so every PNG filter path
-    (None/Sub/Up/Average/Paeth) is exercised across the fixture set."""
-
-    from ..functions.codecs import encode_png
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                r0, g0, b0 = m % 200, m % 220, m * 13 % 256
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[..., 0] = r0 + np.arange(w)[None, :]
-                px[..., 1] = g0 + np.arange(h)[:, None]
-                px[..., 2] = b0
-                payloads.append(encode_png(px))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-_PNG_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("n_pixels", T.LongType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-    ]
-)
-
-
-def decode_pngs(df: DataFrame) -> DataFrame:
-    """REAL PNG decode over mapInPandas: chunk walk, zlib-inflate,
-    per-scanline filter reconstruction → dimensions + exact integer
-    channel sums."""
-
-    from ..functions.codecs import decode_png
+    ``rows_for`` must be nested in its query function: closures are
+    pickled by value, while a module-level function here would be
+    pickled by reference and need this package importable on every
+    worker (``functions/codecs.py`` registers itself by value)."""
+    cols = schema.fieldNames()
 
     def batches(it: Iterator) -> Iterator:
         import pandas as pd
 
         for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_png(bytes(payload))
-                rows.append(
-                    (
-                        mid, d["width"], d["height"], d["n_channels"],
-                        d["n_pixels"], d["sum_r"], d["sum_g"], d["sum_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _PNG_DECODE_SCHEMA.fields]
-            )
+            rows = [
+                (m, *(r[c] for c in cols[1:]))
+                for m in map(int, pdf["media_id"])
+                for r in rows_for(m)
+            ]
+            yield pd.DataFrame(rows, columns=cols)
 
-    return df.mapInPandas(batches, schema=_PNG_DECODE_SCHEMA)
+    mid = F.col("media_id")
+    keep = (
+        (F.col("media_type") == media_type)
+        & (mid >= ids.start)
+        & (mid < ids.stop)
+    )
+    ids_df = media_manifest(spark, sf_dir).filter(keep).select("media_id")
+    return ids_df.mapInPandas(batches, schema=schema)
+
+
+_PNG_SCHEMA = _schema(
+    "media_id width height n_channels n_pixels sum_r sum_g sum_b"
+)
+_JPEG_COLOR_SCHEMA = _schema("media_id width height n_channels sum_r sum_g sum_b")
+_BMP_SCHEMA = _schema("media_id width height n_pixels mean_r mean_g mean_b")
+_PCM_SCHEMA = _schema("media_id sample_rate n_channels n_samples peak mean_abs")
+_FLAC_CHANNELS_SCHEMA = _schema(
+    "media_id n_channels channel_mode:string n_samples sum_samples"
+    " min_sample max_sample"
+)
+# the GIF fixtures' 16-color palette: exact mod-function channels
+_GIF_PALETTE = (np.arange(16)[:, None] * [17, 13, 29] % 256).astype(np.uint8)
 
 
 @register(
@@ -431,114 +345,17 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes dimensions and per-channel pixel sums arithmetically
     (gradient sums are closed-form) — any filter-reconstruction or
     inflate-framing bug breaks exact equality."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
-    )
-    decoded = decode_pngs(synthesize_png_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
+    from ..functions.codecs import decode_png, encode_png
 
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        px = np.empty((h, w, 3), np.uint8)
+        px[..., 0] = m % 200 + np.arange(w)
+        px[..., 1] = m % 220 + np.arange(h)[:, None]
+        px[..., 2] = m * 13 % 256
+        return [decode_png(encode_png(px))]
 
-_GIF_COLORS = 16
-
-
-def synthesize_gif_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side GIF synthesis: a CHECKERBOARD of two palette
-    indices (alternation defeats pure run-length and forces real LZW
-    string-table growth), 16-color palette with exact mod-function
-    channels — every decoded stat closed-form."""
-
-    from ..functions.codecs import encode_gif
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        pal = np.stack(
-            [
-                (np.arange(_GIF_COLORS) * 17) % 256,
-                (np.arange(_GIF_COLORS) * 13) % 256,
-                (np.arange(_GIF_COLORS) * 29) % 256,
-            ],
-            axis=1,
-        ).astype(np.uint8)
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                c0, c1 = m % _GIF_COLORS, (m * 7 + 1) % _GIF_COLORS
-                yy, xx = np.indices((h, w))
-                idx = np.where((xx + yy) % 2 == 0, c0, c1).astype(np.uint8)
-                # rotate the two r8 layout levers (combined cycle 6
-                # covers all 4 combos): palette placement and §20
-                # interlaced row order
-                payloads.append(
-                    encode_gif(
-                        idx, pal,
-                        local_palette=(m // 3) % 3 == 2,
-                        interlace=(m // 3) % 2 == 1,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-_GIF_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_pixels", T.LongType()),
-        T.StructField("n_colors", T.LongType()),
-        T.StructField("local_table", T.BooleanType()),
-        T.StructField("interlaced", T.BooleanType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-        T.StructField("row_weighted_r", T.LongType()),
-    ]
-)
-
-
-def decode_gifs(df: DataFrame) -> DataFrame:
-    """REAL GIF decode over mapInPandas: block walk, sub-block
-    reassembly, variable-width LZW, palette lookup → dimensions +
-    exact integer channel sums."""
-
-    from ..functions.codecs import decode_gif
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_gif(bytes(payload))
-                rows.append(
-                    (
-                        mid, d["width"], d["height"], d["n_pixels"],
-                        d["n_colors"], d["local_table"], d["interlaced"],
-                        d["sum_r"], d["sum_g"], d["sum_b"],
-                        d["row_weighted_r"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _GIF_DECODE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_GIF_DECODE_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(200), _PNG_SCHEMA, rows_for)
 
 
 @register(
@@ -598,127 +415,25 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Note the odd fixture widths make the two checkerboard colors
     unbalanced per row, pinning the row-major pixel order too."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    from ..functions.codecs import decode_gif, encode_gif
+
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        yy, xx = np.indices((h, w))
+        idx = np.where((xx + yy) % 2 == 0, m % 16, (m * 7 + 1) % 16)
+        # the two layout levers rotate with combined cycle 6 (all four
+        # combinations): palette placement and §20 interlaced row order
+        payload = encode_gif(
+            idx.astype(np.uint8), _GIF_PALETTE,
+            local_palette=(m // 3) % 3 == 2, interlace=(m // 3) % 2 == 1,
+        )
+        return [decode_gif(payload)]
+
+    schema = _schema(
+        "media_id width height n_pixels n_colors local_table:boolean"
+        " interlaced:boolean sum_r sum_g sum_b row_weighted_r"
     )
-    decoded = decode_gifs(synthesize_gif_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("n_colors").cast("bigint"),
-        "local_table",
-        "interlaced",
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-        F.col("row_weighted_r").cast("bigint"),
-    )
-
-
-def synthesize_gif_anim_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side ANIMATED GIF synthesis: 3 frames per id —
-    full-rect base color, an inner sub-rectangle cycling disposal
-    1/2/3 (interlaced on odd ids), and a top-row checkerboard whose
-    odd cells are TRANSPARENT (the base must show through). The
-    frame geometry is disjoint (row 0 vs the y≥1 inner rect) so the
-    composited final canvas has a closed-form color census."""
-
-    from ..functions.codecs import encode_gif_anim
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        pal = np.stack(
-            [
-                (np.arange(_GIF_COLORS) * 17) % 256,
-                (np.arange(_GIF_COLORS) * 13) % 256,
-                (np.arange(_GIF_COLORS) * 29) % 256,
-            ],
-            axis=1,
-        ).astype(np.uint8)
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = (m % 8) * 3 + 6, (m % 4) * 2 + 4
-                c0, c1 = m % 16, (m * 7 + 1) % 16
-                c2, bg = (m * 5 + 3) % 16, (m + 11) % 16
-                t = (c2 + 1) % 16
-                d = (m // 3) % 3 + 1
-                delay = m % 10 + 1
-                f0 = {
-                    "idx": np.full((h, w), c0, np.uint8), "x": 0,
-                    "y": 0, "disposal": 1, "transparent": None,
-                    "delay_cs": delay,
-                }
-                f1 = {
-                    "idx": np.full((h // 2, w // 2), c1, np.uint8),
-                    "x": 1, "y": 1, "disposal": d, "transparent": None,
-                    "delay_cs": delay, "interlace": m % 2 == 1,
-                }
-                row = np.full((1, w), c2, np.uint8)
-                row[0, 1::2] = t
-                f2 = {
-                    "idx": row, "x": 0, "y": 0, "disposal": 0,
-                    "transparent": t, "delay_cs": delay,
-                }
-                payloads.append(
-                    encode_gif_anim([f0, f1, f2], pal, w, h, bg_index=bg)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-_GIF_ANIM_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("total_delay_cs", T.LongType()),
-        T.StructField("disposal1", T.LongType()),
-        T.StructField("final_sum_r", T.LongType()),
-        T.StructField("final_sum_g", T.LongType()),
-        T.StructField("final_sum_b", T.LongType()),
-        T.StructField("first_sum_r", T.LongType()),
-    ]
-)
-
-
-def decode_gif_anims(df: DataFrame) -> DataFrame:
-    """REAL animated-GIF decode + viewer-exact compositing over
-    mapInPandas (GCE parse, sub-rectangle placement, transparency
-    mask, disposal 1/2/3 canvas restoration)."""
-
-    from ..functions.codecs import decode_gif_anim
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_gif_anim(bytes(payload))
-                rows.append(
-                    (
-                        mid, d["width"], d["height"], d["n_frames"],
-                        d["total_delay_cs"],
-                        d["frames"][1]["disposal"],
-                        d["final_sum_r"], d["final_sum_g"],
-                        d["final_sum_b"], d["first_sum_r"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _GIF_ANIM_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_GIF_ANIM_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(200), schema, rows_for)
 
 
 @register(
@@ -779,85 +494,35 @@ def multimodal_gif_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment, and frame 0's displayed sum. A wrong disposal
     restore, a transparency mask applied backwards, or a frame
     placed at the wrong offset each shift a sum."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_id") % 3 == 1) & (F.col("media_id") < 200)
+    from ..functions.codecs import decode_gif_anim, encode_gif_anim
+
+    def rows_for(m: int) -> list[dict]:
+        w, h = (m % 8) * 3 + 6, (m % 4) * 2 + 4
+        c2, delay = (m * 5 + 3) % 16, m % 10 + 1
+        t = (c2 + 1) % 16
+        row = np.full((1, w), c2, np.uint8)
+        row[0, 1::2] = t
+        frames = [
+            {"idx": np.full((h, w), m % 16, np.uint8), "x": 0, "y": 0,
+             "disposal": 1, "transparent": None, "delay_cs": delay},
+            {"idx": np.full((h // 2, w // 2), (m * 7 + 1) % 16, np.uint8),
+             "x": 1, "y": 1, "disposal": (m // 3) % 3 + 1,
+             "transparent": None, "delay_cs": delay,
+             "interlace": m % 2 == 1},
+            {"idx": row, "x": 0, "y": 0, "disposal": 0, "transparent": t,
+             "delay_cs": delay},
+        ]
+        d = decode_gif_anim(
+            encode_gif_anim(frames, _GIF_PALETTE, w, h, bg_index=(m + 11) % 16)
+        )
+        return [{**d, "disposal1": d["frames"][1]["disposal"]}]
+
+    schema = _schema(
+        "media_id width height n_frames total_delay_cs disposal1"
+        " final_sum_r final_sum_g final_sum_b first_sum_r"
     )
-    decoded = decode_gif_anims(synthesize_gif_anim_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_frames").cast("bigint"),
-        F.col("total_delay_cs").cast("bigint"),
-        F.col("disposal1").cast("bigint"),
-        F.col("final_sum_r").cast("bigint"),
-        F.col("final_sum_g").cast("bigint"),
-        F.col("final_sum_b").cast("bigint"),
-        F.col("first_sum_r").cast("bigint"),
-    )
-
-
-def synthesize_jpeg_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side JPEG synthesis: solid EVEN-gray images (8·s
-    divisible by the standard table's DC quantizer 16 ⟺ gray value
-    even — the lossless fixed point of the lossy pipeline), odd
-    widths/short heights so the MCU-padding crop path runs."""
-
-    from ..functions.codecs import encode_jpeg_gray
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                v = 2 * (m % 127)
-                payloads.append(
-                    encode_jpeg_gray(np.full((h, w), v, np.uint8))
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-_JPEG_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_pixels", T.LongType()),
-        T.StructField("sum_gray", T.LongType()),
-    ]
-)
-
-
-def decode_jpegs(df: DataFrame) -> DataFrame:
-    """REAL JPEG decode over mapInPandas: marker walk, in-stream
-    DQT/DHT tables, Huffman + magnitude decode, dequant, IDCT →
-    dimensions + exact pixel sum."""
-
-    from ..functions.codecs import decode_jpeg
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(payload))
-                rows.append(
-                    (mid, d["width"], d["height"], d["n_pixels"], d["sum_gray"])
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_DECODE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_JPEG_DECODE_SCHEMA)
+    # the oracle's ids (doc_id % 3 = 1) are the audio rows
+    return _round_trip(spark, sf_dir, "audio", range(200), schema, rows_for)
 
 
 @register(
@@ -883,30 +548,15 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     solids are the pipeline's lossless fixed points, so the oracle
     pins dimensions and the exact pixel sum; any DCT-scaling,
     zigzag, bit-packing, or table desync breaks equality."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
-    )
-    decoded = decode_jpegs(synthesize_jpeg_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("sum_gray").cast("bigint"),
-    )
+    from ..functions.codecs import decode_jpeg, encode_jpeg_gray
 
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        px = np.full((h, w), 2 * (m % 127), np.uint8)
+        return [decode_jpeg(encode_jpeg_gray(px))]
 
-_JPEG_COLOR_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-    ]
-)
+    schema = _schema("media_id width height n_pixels sum_gray")
+    return _round_trip(spark, sf_dir, "image", range(200), schema, rows_for)
 
 
 @register(
@@ -939,56 +589,14 @@ def multimodal_jpeg_color_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform breaks equality."""
     from ..functions.codecs import decode_jpeg, encode_jpeg_rgb
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        px = np.full((h, w, 3), 2 * (m % 127), np.uint8)
+        return [decode_jpeg(encode_jpeg_rgb(px))]
+
+    return _round_trip(
+        spark, sf_dir, "image", range(200), _JPEG_COLOR_SCHEMA, rows_for
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h, v = m % 8 * 4 + 5, m % 4 + 2, 2 * (m % 127)
-                d = decode_jpeg(
-                    encode_jpeg_rgb(np.full((h, w, 3), v, np.uint8))
-                )
-                rows.append(
-                    (
-                        m, d["width"], d["height"], d["n_channels"],
-                        d["sum_r"], d["sum_g"], d["sum_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_COLOR_SCHEMA.fields]
-            )
-
-    decoded = ids.select("media_id").mapInPandas(gen, schema=_JPEG_COLOR_SCHEMA)
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
-
-
-_JPEG_NI_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_scans", T.LongType()),
-        T.StructField("subsampled", T.BooleanType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-    ]
-)
 
 
 @register(
@@ -1030,51 +638,26 @@ def multimodal_jpeg_noninterleaved_decode(
         encode_jpeg_rgb_420,
     )
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image")
-        & (F.col("media_id") >= 350)
-        & (F.col("media_id") < 500)
+    def rows_for(m: int) -> list[dict]:
+        w, h, v = m % 8 * 4 + 5, m % 4 + 2, 2 * (m % 127)
+        sub = (m // 3) % 2 == 1
+        enc = encode_jpeg_rgb_420 if sub else encode_jpeg_rgb
+        # every fourth fixture uses the PARTIALLY interleaved §A.2.3
+        # script (Y alone + Cb/Cr interleaved → 2 scans); the rest
+        # stay fully non-interleaved (3)
+        payload = enc(
+            np.full((h, w, 3), v, np.uint8),
+            restart_interval=(m // 3) % 3,
+            interleaved=False,
+            scan_groups=[[0], [1, 2]] if m % 4 == 0 else None,
+        )
+        d = decode_jpeg(payload)
+        return [{**d, "n_scans": payload.count(b"\xff\xda"), "subsampled": sub}]
+
+    schema = _schema(
+        "media_id width height n_scans subsampled:boolean sum_r sum_g sum_b"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h, v = m % 8 * 4 + 5, m % 4 + 2, 2 * (m % 127)
-                sub = (m // 3) % 2 == 1
-                enc = encode_jpeg_rgb_420 if sub else encode_jpeg_rgb
-                # every fourth fixture uses the PARTIALLY interleaved
-                # §A.2.3 script (Y alone + Cb/Cr interleaved → 2
-                # scans); the rest stay fully non-interleaved (3)
-                payload = enc(
-                    np.full((h, w, 3), v, np.uint8),
-                    restart_interval=(m // 3) % 3,
-                    interleaved=False,
-                    scan_groups=(
-                        [[0], [1, 2]] if m % 4 == 0 else None
-                    ),
-                )
-                d = decode_jpeg(payload)
-                rows.append(
-                    (
-                        m, d["width"], d["height"],
-                        payload.count(b"\xff\xda"), sub,
-                        d["sum_r"], d["sum_g"], d["sum_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_NI_SCHEMA.fields]
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_JPEG_NI_SCHEMA)
-        .select(*[f.name for f in _JPEG_NI_SCHEMA.fields])
-    )
+    return _round_trip(spark, sf_dir, "image", range(350, 500), schema, rows_for)
 
 
 @register(
@@ -1107,67 +690,14 @@ def multimodal_jpeg_420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercise the luma-vs-chroma MCU overhang crop."""
     from ..functions.codecs import decode_jpeg, encode_jpeg_rgb_420
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        px = np.full((h, w, 3), 2 * (m % 127), np.uint8)
+        return [decode_jpeg(encode_jpeg_rgb_420(px))]
+
+    return _round_trip(
+        spark, sf_dir, "image", range(200), _JPEG_COLOR_SCHEMA, rows_for
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h, v = m % 8 * 4 + 5, m % 4 + 2, 2 * (m % 127)
-                d = decode_jpeg(
-                    encode_jpeg_rgb_420(np.full((h, w, 3), v, np.uint8))
-                )
-                rows.append(
-                    (
-                        m, d["width"], d["height"], d["n_channels"],
-                        d["sum_r"], d["sum_g"], d["sum_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_COLOR_SCHEMA.fields]
-            )
-
-    decoded = ids.select("media_id").mapInPandas(gen, schema=_JPEG_COLOR_SCHEMA)
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
-
-
-_JPEG_DRI_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("sum_gray", T.LongType()),
-        T.StructField("restart_interval", T.LongType()),
-        T.StructField("n_restarts", T.LongType()),
-    ]
-)
-
-
-_JPEG_EXIF_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("orientation", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("sum_gray", T.LongType()),
-        T.StructField("wsum_row", T.LongType()),
-        T.StructField("wsum_col", T.LongType()),
-    ]
-)
 
 
 @register(
@@ -1212,35 +742,17 @@ def multimodal_jpeg_exif_orientation(
     row."""
     from ..functions.codecs import decode_jpeg, encode_jpeg_gray
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    def rows_for(m: int) -> list[dict]:
+        v = 2 * (m % 97 + 1)
+        img = np.zeros((16, 16), np.uint8)
+        img[:8, :8], img[:8, 8:] = v, v + 2
+        img[8:, :8], img[8:, 8:] = v + 4, v + 6
+        return [decode_jpeg(encode_jpeg_gray(img, exif_orientation=m % 8 + 1))]
+
+    schema = _schema(
+        "media_id orientation width height sum_gray wsum_row wsum_col"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                o = m % 8 + 1
-                v = 2 * (m % 97 + 1)
-                img = np.zeros((16, 16), np.uint8)
-                img[:8, :8] = v
-                img[:8, 8:] = v + 2
-                img[8:, :8] = v + 4
-                img[8:, 8:] = v + 6
-                d = decode_jpeg(encode_jpeg_gray(img, exif_orientation=o))
-                rows.append(
-                    (m, d["orientation"], d["width"], d["height"],
-                     d["sum_gray"], d["wsum_row"], d["wsum_col"])
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_EXIF_SCHEMA.fields]
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_JPEG_EXIF_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(200), schema, rows_for)
 
 
 @register(
@@ -1275,137 +787,25 @@ def multimodal_jpeg_dri_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     misplaced them breaks the count."""
     from ..functions.codecs import decode_jpeg, encode_jpeg_gray
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    def rows_for(m: int) -> list[dict]:
+        w, h, ri = m % 8 * 8 + 21, m % 4 * 8 + 6, m % 5 + 1
+        data = encode_jpeg_gray(
+            np.full((h, w), 2 * (m % 127), np.uint8), restart_interval=ri
+        )
+        # count RSTn markers in the emitted stream: entropy 0xFF bytes
+        # are always stuffed with 0x00, so a raw FF D0-D7 pair can only
+        # BE a restart marker
+        n_rst = sum(
+            1
+            for i in range(len(data) - 1)
+            if data[i] == 0xFF and 0xD0 <= data[i + 1] <= 0xD7
+        )
+        return [{**decode_jpeg(data), "restart_interval": ri, "n_restarts": n_rst}]
+
+    schema = _schema(
+        "media_id width height sum_gray restart_interval n_restarts"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 8 + 21, m % 4 * 8 + 6
-                v = 2 * (m % 127)
-                ri = m % 5 + 1
-                data = encode_jpeg_gray(
-                    np.full((h, w), v, np.uint8), restart_interval=ri
-                )
-                # count RSTn markers in the emitted stream: entropy
-                # 0xFF bytes are always stuffed with 0x00, so a raw
-                # FF D0-D7 pair can only BE a restart marker
-                n_rst = sum(
-                    1
-                    for i in range(len(data) - 1)
-                    if data[i] == 0xFF and 0xD0 <= data[i + 1] <= 0xD7
-                )
-                d = decode_jpeg(data)
-                rows.append(
-                    (m, d["width"], d["height"], d["sum_gray"], ri, n_rst)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_DRI_SCHEMA.fields]
-            )
-
-    decoded = ids.select("media_id").mapInPandas(gen, schema=_JPEG_DRI_SCHEMA)
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("sum_gray").cast("bigint"),
-        F.col("restart_interval").cast("bigint"),
-        F.col("n_restarts").cast("bigint"),
-    )
-
-
-def decode_audio(df: DataFrame) -> DataFrame:
-    """REAL audio decode over mapInPandas: parse each RIFF/WAVE
-    payload (chunk walk, PCM-16) into rate/frames/peak/mean-abs."""
-
-    from ..functions.codecs import decode_wav
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_wav(bytes(payload))
-                rows.append(
-                    (
-                        mid, d["sample_rate"], d["n_channels"],
-                        d["n_samples"], d["duration_ms"], d["peak"],
-                        d["mean_abs"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _AUDIO_DECODE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_AUDIO_DECODE_SCHEMA)
-
-
-def decode_image(df: DataFrame) -> DataFrame:
-    """REAL image decode over mapInPandas: parse each BMP payload
-    (headers, stride padding, bottom-up rows, BGR order) into
-    dimensions + exact integer channel means."""
-
-    from ..functions.codecs import decode_bmp
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_bmp(bytes(payload))
-                rows.append(
-                    (
-                        mid, d["width"], d["height"], d["n_pixels"],
-                        d["mean_r"], d["mean_g"], d["mean_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _IMAGE_DECODE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_IMAGE_DECODE_SCHEMA)
-
-
-def resize_images(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Decode → nearest-neighbor resize → re-encode, one Arrow batch
-    stage: the standard distributed image-preprocessing step (every
-    vision-data pipeline resizes before feature extraction). Output is
-    again (media_id, payload) with BMP payloads of the target size."""
-
-    from ..functions.codecs import decode_bmp, encode_bmp24, resize_nearest
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for payload in pdf["payload"]:
-                b = bytes(payload)
-                d = decode_bmp(b)
-                h, w = d["height"], d["width"]
-                stride = (3 * w + 3) & ~3
-                off = int.from_bytes(b[10:14], "little")
-                rows = np.frombuffer(
-                    b, dtype=np.uint8, count=h * stride, offset=off
-                ).reshape(h, stride)
-                px = rows[:, : 3 * w].reshape(h, w, 3)[::-1, :, ::-1]
-                payloads.append(
-                    encode_bmp24(resize_nearest(px, out_w, out_h))
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return df.mapInPandas(batches, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(200), schema, rows_for)
 
 
 @register(
@@ -1429,19 +829,17 @@ def multimodal_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hand-rolled chunk walker. The oracle recomputes every decoded
     field arithmetically — a byte-level codec bug (stride, chunk
     alignment, endianness) breaks exact equality."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio") & (F.col("media_id") < 200)
+    from ..functions.codecs import decode_wav, encode_wav_pcm16
+
+    def rows_for(m: int) -> list[dict]:
+        amp, n = m % 320 * 100, 800 + m % 10 * 160
+        wave_ = np.tile([amp, -amp], (n + 1) // 2)[:n]
+        return [decode_wav(encode_wav_pcm16(wave_, 16000))]
+
+    schema = _schema(
+        "media_id sample_rate n_channels n_samples duration_ms peak mean_abs"
     )
-    decoded = decode_audio(synthesize_wav_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("sample_rate").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_samples").cast("bigint"),
-        F.col("duration_ms").cast("bigint"),
-        F.col("peak").cast("bigint"),
-        F.col("mean_abs").cast("bigint"),
-    )
+    return _round_trip(spark, sf_dir, "audio", range(200), schema, rows_for)
 
 
 @register(
@@ -1464,19 +862,14 @@ def multimodal_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     images encoded and re-parsed byte-for-byte (headers, 4-byte row
     padding, bottom-up BGR order); decoded dimensions and channel
     means must equal their arithmetic definitions exactly."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
-    )
-    decoded = decode_image(synthesize_bmp_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("mean_r").cast("bigint"),
-        F.col("mean_g").cast("bigint"),
-        F.col("mean_b").cast("bigint"),
-    )
+    from ..functions.codecs import decode_bmp, encode_bmp24
+
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        rgb = (m % 256, m * 7 % 256, m * 13 % 256)
+        return [decode_bmp(encode_bmp24(np.full((h, w, 3), rgb, np.uint8)))]
+
+    return _round_trip(spark, sf_dir, "image", range(200), _BMP_SCHEMA, rows_for)
 
 
 @register(
@@ -1499,78 +892,24 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep their exact channel means through any correct resampler, so
     the oracle pins both the target dimensions and color fidelity of
     the full two-pass codec chain."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
-    )
-    resized = resize_images(synthesize_bmp_payloads(ids), 8, 6)
-    decoded = decode_image(resized)
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("mean_r").cast("bigint"),
-        F.col("mean_g").cast("bigint"),
-        F.col("mean_b").cast("bigint"),
-    )
+    from ..functions.codecs import decode_bmp, encode_bmp24, resize_nearest
 
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        rgb = (m % 256, m * 7 % 256, m * 13 % 256)
+        b = encode_bmp24(np.full((h, w, 3), rgb, np.uint8))
+        # decode: stride-padded bottom-up BGR rows back to RGB pixels
+        d = decode_bmp(b)
+        h, w = d["height"], d["width"]
+        stride = (3 * w + 3) & ~3
+        off = int.from_bytes(b[10:14], "little")
+        rows = np.frombuffer(
+            b, dtype=np.uint8, count=h * stride, offset=off
+        ).reshape(h, stride)
+        px = rows[:, : 3 * w].reshape(h, w, 3)[::-1, :, ::-1]
+        return [decode_bmp(encode_bmp24(resize_nearest(px, 8, 6)))]
 
-_FRAME_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("mean_r", T.LongType()),
-        T.StructField("mean_g", T.LongType()),
-        T.StructField("mean_b", T.LongType()),
-    ]
-)
-
-
-def synthesize_avi_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side AVI synthesis: per media_id, n_frames = id%30+1
-    solid-color DIB frames at odd width (id%6)·4+5 (stride padding
-    exercised per frame), height (id%3)+2, 10 fps. Frame f's RGB is
-    an exact mod-function of (id, f), so every sampled frame's channel
-    means are SQL-derivable and the oracle checks the REAL demux +
-    per-frame decode byte path."""
-
-    from ..functions.codecs import encode_avi_dib
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                n, w, h = m % 30 + 1, m % 6 * 4 + 5, m % 3 + 2
-                f = np.arange(n, dtype=np.int64)
-                px = np.empty((n, h, w, 3), dtype=np.uint8)
-                px[..., 0] = ((m + 11 * f) % 256)[:, None, None]
-                px[..., 1] = ((m * 7 + 3 * f) % 256)[:, None, None]
-                px[..., 2] = ((m * 13 + 5 * f) % 256)[:, None, None]
-                payloads.append(encode_avi_dib(px, fps=10))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-_MJPG_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("mean_gray", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "image", range(200), _BMP_SCHEMA, rows_for)
 
 
 @register(
@@ -1604,136 +943,23 @@ def multimodal_mjpg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_avi_mjpg,
     )
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "video") & (F.col("media_id") < 150)
-    )
+    def rows_for(m: int) -> list[dict]:
+        n, w, h = m % 30 + 1, m % 6 * 4 + 5, m % 3 + 2
+        vals = [2 * ((m + 11 * f) % 128) for f in range(n)]
+        frames = np.stack([np.full((h, w, 3), v, np.uint8) for v in vals])
+        payload = encode_avi_mjpg(frames, fps=10)
+        d = decode_avi(payload)
+        assert d["codec"] == "mjpg"
+        rows = []
+        for fi in range(0, d["n_frames"], 3):
+            px = decode_avi_mjpg_frame(payload, d["frames"][fi])
+            total = int(px.astype(np.int64).sum())
+            mean = total // (px.shape[0] * px.shape[1] * 3)
+            rows.append({**d, "frame_idx": fi, "mean_gray": mean})
+        return rows
 
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                n, w, h = m % 30 + 1, m % 6 * 4 + 5, m % 3 + 2
-                vals = [2 * ((m + 11 * f) % 128) for f in range(n)]
-                frames = np.stack(
-                    [np.full((h, w, 3), v, np.uint8) for v in vals]
-                )
-                payload = encode_avi_mjpg(frames, fps=10)
-                d = decode_avi(payload)
-                assert d["codec"] == "mjpg"
-                for fi in range(0, d["n_frames"], 3):
-                    px = decode_avi_mjpg_frame(payload, d["frames"][fi])
-                    total = int(px.astype(np.int64).sum())
-                    rows.append(
-                        (
-                            m, fi, d["n_frames"], d["width"], d["height"],
-                            total // (px.shape[0] * px.shape[1] * 3),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _MJPG_SAMPLE_SCHEMA.fields]
-            )
-
-    sampled = ids.select("media_id").mapInPandas(
-        gen, schema=_MJPG_SAMPLE_SCHEMA
-    )
-    return sampled.select(
-        "media_id", "frame_idx", "n_frames", "width", "height", "mean_gray"
-    )
-
-
-def sample_video_frames(df: DataFrame, every: int) -> DataFrame:
-    """REAL video frame-sampling over mapInPandas: demux each RIFF/AVI
-    payload (chunk walk → header + '00db' frame directory), decode
-    every Nth DIB frame (stride unpadding, bottom-up flip, BGR→RGB),
-    and emit per-frame dimensions + exact integer channel means — the
-    distributed work units a vision feature-extractor consumes."""
-
-    from ..functions.codecs import decode_avi, decode_avi_frame
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                d = decode_avi(b)
-                w, h, n = d["width"], d["height"], d["n_frames"]
-                npix = w * h
-                for fi in range(0, n, every):
-                    px = decode_avi_frame(b, d["frames"][fi], w, h)
-                    sums = px.reshape(-1, 3).astype(np.int64).sum(axis=0)
-                    rows.append(
-                        (
-                            mid, fi, n, w, h,
-                            int(sums[0] // npix), int(sums[1] // npix),
-                            int(sums[2] // npix),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FRAME_SAMPLE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_FRAME_SAMPLE_SCHEMA)
-
-
-_AUDIO_FRAME_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("frame_samples", T.LongType()),
-        T.StructField("peak", T.LongType()),
-        T.StructField("mean_abs", T.LongType()),
-        T.StructField("zero_crossings", T.LongType()),
-    ]
-)
-
-
-def extract_audio_frames(df: DataFrame, frame_len: int) -> DataFrame:
-    """Windowed audio feature extraction over mapInPandas: split each
-    decoded PCM stream into fixed-length analysis frames (last frame
-    ragged) and emit per-frame peak, floor mean-abs, and the
-    zero-crossing count (signbit flips between adjacent samples) —
-    the framing stage every speech pipeline (MFCC/wav2vec-style
-    preprocessing) starts from."""
-
-    from ..functions.codecs import decode_wav_samples
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _rate, _ch, x = decode_wav_samples(bytes(payload))
-                n = len(x)
-                for fi in range((n + frame_len - 1) // frame_len):
-                    fr = x[fi * frame_len : (fi + 1) * frame_len].astype(
-                        np.int64
-                    )
-                    ab = np.abs(fr)
-                    zc = int(
-                        np.count_nonzero(
-                            np.signbit(fr[:-1]) != np.signbit(fr[1:])
-                        )
-                    )
-                    rows.append(
-                        (
-                            mid, fi, len(fr), int(ab.max()),
-                            int(ab.mean()), zc,
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _AUDIO_FRAME_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_AUDIO_FRAME_SCHEMA)
+    schema = _schema("media_id frame_idx n_frames width height mean_gray")
+    return _round_trip(spark, sf_dir, "video", range(150), schema, rows_for)
 
 
 @register(
@@ -1766,14 +992,30 @@ def multimodal_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     every boundary, so zero_crossings = frame_samples − 1 (0 for the
     silent amp=0 payloads). A framing off-by-one (dropped ragged tail,
     overlapping windows) or a crossing miscount breaks equality."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio") & (F.col("media_id") < 200)
+    from ..functions.codecs import decode_wav_samples, encode_wav_pcm16
+
+    frame_len = 400
+
+    def rows_for(m: int) -> list[dict]:
+        amp, n = m % 320 * 100, 800 + m % 10 * 160
+        wave_ = np.tile([amp, -amp], (n + 1) // 2)[:n]
+        _rate, _ch, x = decode_wav_samples(encode_wav_pcm16(wave_, 16000))
+        rows = []
+        for fi in range((len(x) + frame_len - 1) // frame_len):
+            fr = x[fi * frame_len : (fi + 1) * frame_len].astype(np.int64)
+            ab = np.abs(fr)
+            flips = np.signbit(fr[:-1]) != np.signbit(fr[1:])
+            rows.append({
+                "frame_idx": fi, "frame_samples": len(fr),
+                "peak": int(ab.max()), "mean_abs": int(ab.mean()),
+                "zero_crossings": int(np.count_nonzero(flips)),
+            })
+        return rows
+
+    schema = _schema(
+        "media_id frame_idx frame_samples peak mean_abs zero_crossings"
     )
-    framed = extract_audio_frames(synthesize_wav_payloads(ids), frame_len=400)
-    return framed.select(
-        "media_id", "frame_idx", "frame_samples", "peak", "mean_abs",
-        "zero_crossings",
-    )
+    return _round_trip(spark, sf_dir, "audio", range(200), schema, rows_for)
 
 
 @register(
@@ -1803,61 +1045,32 @@ def multimodal_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     off-by-one in the sampling stride breaks exact equality. Upgrades
     the reference's frame-sample surface from index fan-out plumbing
     (`multimodal_frame_sample`) to a byte-level decode path."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "video") & (F.col("media_id") < 150)
+    from ..functions.codecs import decode_avi, decode_avi_frame, encode_avi_dib
+
+    def rows_for(m: int) -> list[dict]:
+        n, w, h = m % 30 + 1, m % 6 * 4 + 5, m % 3 + 2
+        f = np.arange(n, dtype=np.int64)[:, None, None]
+        px = np.empty((n, h, w, 3), dtype=np.uint8)
+        px[..., 0] = (m + 11 * f) % 256
+        px[..., 1] = (m * 7 + 3 * f) % 256
+        px[..., 2] = (m * 13 + 5 * f) % 256
+        payload = encode_avi_dib(px, fps=10)
+        d = decode_avi(payload)
+        w, h = d["width"], d["height"]
+        rows = []
+        for fi in range(0, d["n_frames"], 5):
+            fr = decode_avi_frame(payload, d["frames"][fi], w, h)
+            r, g, b = fr.reshape(-1, 3).astype(np.int64).sum(axis=0) // (w * h)
+            rows.append({
+                **d, "frame_idx": fi,
+                "mean_r": int(r), "mean_g": int(g), "mean_b": int(b),
+            })
+        return rows
+
+    schema = _schema(
+        "media_id frame_idx n_frames width height mean_r mean_g mean_b"
     )
-    sampled = sample_video_frames(synthesize_avi_payloads(ids), every=5)
-    return sampled.select(
-        "media_id", "frame_idx", "n_frames", "width", "height",
-        "mean_r", "mean_g", "mean_b",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Compressed audio (G.711 μ-law / A-law, IMA ADPCM) — round-6 codecs.
-# Telephony corpora (call-center speech, VoIP captures) arrive G.711-
-# companded; consumer capture tools emit IMA ADPCM. Both decode with
-# pure table arithmetic (functions/codecs.py), so the Spark plumbing
-# is identical to the PCM path: synthesize → decode_audio → stats.
-# ---------------------------------------------------------------------------
-
-
-def synthesize_g711_payloads(ids: DataFrame, law: str) -> DataFrame:
-    """Executor-side G.711 synthesis: a square wave of SPEC-DERIVED
-    code bytes (positive/negative codes with exponent ``id % 8`` and
-    law-specific mantissa), so the fixture tests the decoder
-    independently of the encoder and the decoded amplitude is a
-    closed-form function of id (see the operator oracles)."""
-
-    from ..functions.codecs import encode_wav_g711_codes
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                e = m % 8
-                if law == "u":
-                    mant = m * 7 % 16
-                    pos = 0xFF ^ ((e << 4) | mant)  # sign bit clear pre-
-                    neg = 0x7F ^ ((e << 4) | mant)  # complement = positive
-                else:
-                    mant = m * 11 % 16
-                    pos = (0x80 | (e << 4) | mant) ^ 0x55
-                    neg = ((e << 4) | mant) ^ 0x55
-                n = 800 + m % 10 * 160
-                codes = np.tile([pos, neg], (n + 1) // 2)[:n]
-                payloads.append(
-                    encode_wav_g711_codes(codes.astype(np.uint8), 8000, law)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "video", range(150), schema, rows_for)
 
 
 @register(
@@ -1883,18 +1096,18 @@ def multimodal_ulaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     is closed-form, so the oracle pins complementing, sign handling,
     and the segment expansion exactly. Alternating ± codes exercise
     both sign branches in every payload."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio") & (F.col("media_id") < 200)
-    )
-    decoded = decode_audio(synthesize_g711_payloads(ids, "u"))
-    return decoded.select(
-        "media_id",
-        F.col("sample_rate").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_samples").cast("bigint"),
-        F.col("peak").cast("bigint"),
-        F.col("mean_abs").cast("bigint"),
-    )
+    from ..functions.codecs import decode_wav, encode_wav_g711_codes
+
+    def rows_for(m: int) -> list[dict]:
+        code = ((m % 8) << 4) | (m * 7 % 16)
+        # μ-law stores complemented codes; a clear sign bit before the
+        # complement is the positive half-wave
+        n = 800 + m % 10 * 160
+        codes = np.tile([0xFF ^ code, 0x7F ^ code], (n + 1) // 2)[:n]
+        payload = encode_wav_g711_codes(codes.astype(np.uint8), 8000, "u")
+        return [decode_wav(payload)]
+
+    return _round_trip(spark, sf_dir, "audio", range(200), _PCM_SCHEMA, rows_for)
 
 
 @register(
@@ -1926,62 +1139,17 @@ def multimodal_alaw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((m·16+264)·2^(e−1)), and the inverted sign convention (sign bit
     SET = positive). The CASE split in the oracle pins the seg-0
     boundary exactly."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio") & (F.col("media_id") < 200)
-    )
-    decoded = decode_audio(synthesize_g711_payloads(ids, "a"))
-    return decoded.select(
-        "media_id",
-        F.col("sample_rate").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_samples").cast("bigint"),
-        F.col("peak").cast("bigint"),
-        F.col("mean_abs").cast("bigint"),
-    )
+    from ..functions.codecs import decode_wav, encode_wav_g711_codes
 
+    def rows_for(m: int) -> list[dict]:
+        code = ((m % 8) << 4) | (m * 11 % 16)
+        n = 800 + m % 10 * 160
+        # A-law XORs 0x55 into every code; a SET sign bit is positive
+        codes = np.tile([(0x80 | code) ^ 0x55, code ^ 0x55], (n + 1) // 2)[:n]
+        payload = encode_wav_g711_codes(codes.astype(np.uint8), 8000, "a")
+        return [decode_wav(payload)]
 
-_ADPCM_BLOCK_ALIGN = 256
-_ADPCM_N_BLOCKS = 2
-
-
-def synthesize_adpcm_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side IMA ADPCM synthesis: spec-derived all-nibble-1
-    blocks. From step index 0 (step 7), nibble 1 adds exactly
-    (7>>3)+(7>>2) = 1 per sample and the index transition −1 clamps
-    at 0, so the decoded signal is an exact unit RAMP from each
-    block's header predictor. Block b opens at p0 + b·spb, making the
-    whole stream p0, p0+1, …, p0+n−1 — every summary stat closed-form
-    while still exercising the nibble unpack order, the per-block
-    predictor reset, and the delta adder."""
-
-    from ..functions.codecs import (
-        adpcm_samples_per_block, encode_wav_adpcm_blocks,
-    )
-
-    def gen(it: Iterator) -> Iterator:
-        import struct as _struct
-
-        import pandas as pd
-
-        spb = adpcm_samples_per_block(_ADPCM_BLOCK_ALIGN)
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                p0 = int(mid) % 200 * 50
-                blocks = b""
-                for b in range(_ADPCM_N_BLOCKS):
-                    blocks += (
-                        _struct.pack("<hBB", p0 + b * spb, 0, 0)
-                        + b"\x11" * (_ADPCM_BLOCK_ALIGN - 4)
-                    )
-                payloads.append(
-                    encode_wav_adpcm_blocks(blocks, 8000, _ADPCM_BLOCK_ALIGN)
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "audio", range(200), _PCM_SCHEMA, rows_for)
 
 
 @register(
@@ -2007,31 +1175,23 @@ def multimodal_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     to exact arithmetic ramps while the step/index tables engage).
     The arbitrary-signal error path is bounded separately by the
     encoder/decoder reconstruction-identity pytest property."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio") & (F.col("media_id") < 200)
-    )
-    decoded = decode_audio(synthesize_adpcm_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("sample_rate").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_samples").cast("bigint"),
-        F.col("peak").cast("bigint"),
-        F.col("mean_abs").cast("bigint"),
+    from ..functions.codecs import (
+        adpcm_samples_per_block,
+        decode_wav,
+        encode_wav_adpcm_blocks,
     )
 
+    def rows_for(m: int) -> list[dict]:
+        # two all-nibble-1 blocks of 256 bytes; block b's header
+        # predictor continues the unit ramp from p0
+        p0, spb = m % 200 * 50, adpcm_samples_per_block(256)
+        blocks = b"".join(
+            struct.pack("<hBB", p0 + b * spb, 0, 0) + b"\x11" * 252
+            for b in range(2)
+        )
+        return [decode_wav(encode_wav_adpcm_blocks(blocks, 8000, 256))]
 
-_ADPCM_STEREO_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("sample_rate", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_samples", T.LongType()),
-        T.StructField("min_sample", T.LongType()),
-        T.StructField("max_sample", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "audio", range(200), _PCM_SCHEMA, rows_for)
 
 
 @register(
@@ -2069,90 +1229,30 @@ def multimodal_adpcm_stereo_decode(
     encoder/decoder reconstruction pytest property."""
     from ..functions.codecs import decode_wav_samples, encode_wav_adpcm_blocks
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio") & (F.col("media_id") < 150)
+    def rows_for(m: int) -> list[dict]:
+        nb, b0, b1 = m % 3 + 1, m % 900 - 450, m % 700 - 350
+        blocks = b"".join(
+            struct.pack("<hBB", b0 + b * 249, 0, 0)
+            + struct.pack("<hBB", b1 + b * 249, 0, 0)
+            + b"\x11" * 248
+            for b in range(nb)
+        )
+        payload = encode_wav_adpcm_blocks(
+            blocks, 8000, 256, n_channels=2, n_frames=249 * nb
+        )
+        rate, ch, y = decode_wav_samples(payload)
+        y = y.astype(np.int64)
+        return [{
+            "sample_rate": rate, "n_channels": ch, "n_samples": y.shape[0],
+            "sum_samples": int(y.sum()), "min_sample": int(y.min()),
+            "max_sample": int(y.max()),
+        }]
+
+    schema = _schema(
+        "media_id sample_rate n_channels n_samples sum_samples min_sample"
+        " max_sample"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import struct as _struct
-
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                nb = m % 3 + 1
-                b0, b1 = m % 900 - 450, m % 700 - 350
-                blocks = b""
-                for b in range(nb):
-                    blocks += _struct.pack("<hBB", b0 + b * 249, 0, 0)
-                    blocks += _struct.pack("<hBB", b1 + b * 249, 0, 0)
-                    blocks += b"\x11" * 248
-                n = 249 * nb
-                payload = encode_wav_adpcm_blocks(
-                    blocks, 8000, 256, n_channels=2, n_frames=n
-                )
-                rate, ch, y = decode_wav_samples(payload)
-                y = y.astype(np.int64)
-                rows.append(
-                    (
-                        m, rate, ch, y.shape[0], int(y.sum()),
-                        int(y.min()), int(y.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in _ADPCM_STEREO_SCHEMA.fields],
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_ADPCM_STEREO_SCHEMA)
-        .select(*[f.name for f in _ADPCM_STEREO_SCHEMA.fields])
-    )
-
-
-# ---------------------------------------------------------------------------
-# Indexed-color (palette) PNG — round-6 codec: the PNG color type
-# real web corpora actually contain (icons, screenshots, charts).
-# ---------------------------------------------------------------------------
-
-
-def synthesize_palette_png_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side palette-PNG synthesis: the GIF checkerboard
-    fixture re-expressed as PNG color type 3 — two id-derived palette
-    entries alternating per pixel, written through the real
-    zlib+filter encoder with filter schedule ``y % 5``. Filters apply
-    to INDEX bytes (bpp=1), the part palette-PNG readers get wrong."""
-
-    from ..functions.codecs import encode_png_palette
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                pal = np.array(
-                    [
-                        [m % 251, m * 3 % 256, m * 7 % 256],
-                        [m * 5 % 256, m * 11 % 256, m * 13 % 256],
-                    ],
-                    np.uint8,
-                )
-                yy, xx = np.indices((h, w))
-                idx = ((xx + yy) % 2).astype(np.uint8)
-                payloads.append(encode_png_palette(idx, pal))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "audio", range(150), schema, rows_for)
 
 
 @register(
@@ -2187,50 +1287,22 @@ def multimodal_palette_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame
     checkerboard counting identity on the palette channels — a filter
     bpp bug (treating indices as RGB triples) or a PLTE lookup error
     breaks exact equality."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
-    )
-    decoded = decode_pngs(synthesize_palette_png_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
+    from ..functions.codecs import decode_png, encode_png_palette
 
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        pal = np.array(
+            [
+                [m % 251, m * 3 % 256, m * 7 % 256],
+                [m * 5 % 256, m * 11 % 256, m * 13 % 256],
+            ],
+            np.uint8,
+        )
+        yy, xx = np.indices((h, w))
+        idx = ((xx + yy) % 2).astype(np.uint8)
+        return [decode_png(encode_png_palette(idx, pal))]
 
-def synthesize_interlaced_png_payloads(ids: DataFrame) -> DataFrame:
-    """The PNG gradient fixture written as Adam7 INTERLACED streams
-    (interlace method 1): the same pixels, shipped as seven pass
-    sub-images each with its own filter state — the progressive-
-    rendering layout real web PNGs use."""
-
-    from ..functions.codecs import encode_png
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                r0, g0, b0 = m % 200, m % 220, m * 13 % 256
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[..., 0] = r0 + np.arange(w)[None, :]
-                px[..., 1] = g0 + np.arange(h)[:, None]
-                px[..., 2] = b0
-                payloads.append(encode_png(px, interlace=True))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(200), _PNG_SCHEMA, rows_for)
 
 
 @register(
@@ -2267,52 +1339,17 @@ def multimodal_interlaced_png_decode(
     per-pass filter state, empty-pass handling for narrow images
     (fixture heights 2-5 leave several passes empty). Dimensions and
     channel sums must land exactly where the sequential layout does."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
-    )
-    decoded = decode_pngs(synthesize_interlaced_png_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
+    from ..functions.codecs import decode_png, encode_png
 
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        px = np.empty((h, w, 3), np.uint8)
+        px[..., 0] = m % 200 + np.arange(w)
+        px[..., 1] = m % 220 + np.arange(h)[:, None]
+        px[..., 2] = m * 13 % 256
+        return [decode_png(encode_png(px, interlace=True))]
 
-def synthesize_png16_payloads(ids: DataFrame) -> DataFrame:
-    """16-BIT PNG gradients (scientific/medical dynamic range): ramps
-    scaled ×255/×511 so pixel values exceed any 8-bit representation —
-    a decoder that drops the high byte (or flips endianness) cannot
-    reproduce the sums."""
-
-    from ..functions.codecs import encode_png
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                r0 = m * 250 % 50000
-                g0 = m * 199 % 40000
-                b0 = m * 157 % 60000
-                px = np.empty((h, w, 3), dtype=np.uint16)
-                px[..., 0] = r0 + 255 * np.arange(w)[None, :]
-                px[..., 1] = g0 + 511 * np.arange(h)[:, None]
-                px[..., 2] = b0
-                payloads.append(encode_png(px))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(200), _PNG_SCHEMA, rows_for)
 
 
 @register(
@@ -2342,54 +1379,17 @@ def multimodal_png16_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     recombination. Gradient steps of 255/511 put most pixels outside
     the 8-bit range, so a truncated high byte or a little-endian
     reassembly breaks the exact sums."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
-    )
-    decoded = decode_pngs(synthesize_png16_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("n_pixels").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
+    from ..functions.codecs import decode_png, encode_png
 
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        px = np.empty((h, w, 3), np.uint16)
+        px[..., 0] = m * 250 % 50000 + 255 * np.arange(w)
+        px[..., 1] = m * 199 % 40000 + 511 * np.arange(h)[:, None]
+        px[..., 2] = m * 157 % 60000
+        return [decode_png(encode_png(px))]
 
-def synthesize_progressive_jpeg_payloads(ids: DataFrame) -> DataFrame:
-    """Solid gray-valued RGB images through the PROGRESSIVE (SOF2)
-    encoder — the full Annex G scan script (DC first at Al=1, two
-    spectral AC bands per component, AC refinement, DC refinement).
-    Gray-valued even solids remain the lossless fixed line, so the
-    multi-scan coefficient reassembly must reproduce them exactly."""
-
-    from ..functions.codecs import encode_jpeg_progressive
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                v = 2 * (m % 127)
-                payloads.append(
-                    encode_jpeg_progressive(
-                        np.full((h, w, 3), v, np.uint8),
-                        # rotate in-scan restart intervals (0 = none;
-                        # r8: RSTn inside progressive scans decode)
-                        restart_interval=(m // 3) % 3,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(200), _PNG_SCHEMA, rows_for)
 
 
 @register(
@@ -2421,54 +1421,21 @@ def multimodal_progressive_jpeg_decode(
     stronger property (pytest) is that progressive streams decode
     BIT-IDENTICALLY to their baseline twins; the oracle pins the
     closed-form solid sums through the full multi-scan path."""
-    from ..functions.codecs import decode_jpeg
+    from ..functions.codecs import decode_jpeg, encode_jpeg_progressive
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        payload = encode_jpeg_progressive(
+            np.full((h, w, 3), 2 * (m % 127), np.uint8),
+            # rotate in-scan restart intervals (0 = none; r8: RSTn
+            # inside progressive scans decode)
+            restart_interval=(m // 3) % 3,
+        )
+        return [decode_jpeg(payload)]
+
+    return _round_trip(
+        spark, sf_dir, "image", range(200), _JPEG_COLOR_SCHEMA, rows_for
     )
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_jpeg(bytes(payload))
-                rows.append(
-                    (
-                        mid, d["width"], d["height"], d["n_channels"],
-                        d["sum_r"], d["sum_g"], d["sum_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_COLOR_SCHEMA.fields]
-            )
-
-    decoded = synthesize_progressive_jpeg_payloads(ids).mapInPandas(
-        batches, schema=_JPEG_COLOR_SCHEMA
-    )
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
-
-
-_MP4_SAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("frame_idx", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("duration_ts", T.LongType()),
-        T.StructField("mean_gray", T.LongType()),
-    ]
-)
 
 
 @register(
@@ -2506,63 +1473,28 @@ def multimodal_mp4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_mp4_mjpeg,
     )
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "video")
-        & (F.col("media_id") >= 150)
-        & (F.col("media_id") < 300)
+    def rows_for(m: int) -> list[dict]:
+        n, w, h = m % 24 + 1, m % 5 * 4 + 6, m % 4 + 2
+        vals = [2 * ((m + 7 * f) % 128) for f in range(n)]
+        frames = np.stack([np.full((h, w, 3), v, np.uint8) for v in vals])
+        payload = encode_mp4_mjpeg(frames, fps=10, co64=(m % 2 == 0))
+        d = decode_mp4(payload)
+        assert d["codec"] == "jpeg" and d["timescale"] == 600
+        rows = []
+        for fi in range(0, d["n_frames"], 3):
+            px = decode_mp4_frame(payload, d["frames"][fi])
+            total = int(px.astype(np.int64).sum())
+            mean = total // (px.shape[0] * px.shape[1] * 3)
+            rows.append({
+                **d, "frame_idx": fi, "duration_ts": d["duration"],
+                "mean_gray": mean,
+            })
+        return rows
+
+    schema = _schema(
+        "media_id frame_idx n_frames width height duration_ts mean_gray"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                n, w, h = m % 24 + 1, m % 5 * 4 + 6, m % 4 + 2
-                vals = [2 * ((m + 7 * f) % 128) for f in range(n)]
-                frames = np.stack(
-                    [np.full((h, w, 3), v, np.uint8) for v in vals]
-                )
-                payload = encode_mp4_mjpeg(frames, fps=10, co64=(m % 2 == 0))
-                d = decode_mp4(payload)
-                assert d["codec"] == "jpeg" and d["timescale"] == 600
-                for fi in range(0, d["n_frames"], 3):
-                    px = decode_mp4_frame(payload, d["frames"][fi])
-                    total = int(px.astype(np.int64).sum())
-                    rows.append(
-                        (
-                            m, fi, d["n_frames"], d["width"], d["height"],
-                            d["duration"],
-                            total // (px.shape[0] * px.shape[1] * 3),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _MP4_SAMPLE_SCHEMA.fields]
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_MP4_SAMPLE_SCHEMA)
-        .select(
-            "media_id", "frame_idx", "n_frames", "width", "height",
-            "duration_ts", "mean_gray",
-        )
-    )
-
-
-_FLAC_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("sample_rate", T.LongType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_samples", T.LongType()),
-        T.StructField("min_sample", T.LongType()),
-        T.StructField("max_sample", T.LongType()),
-        T.StructField("compressed", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "video", range(150, 300), schema, rows_for)
 
 
 @register(
@@ -2596,57 +1528,18 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the codec must actually compress, not just round-trip."""
     from ..functions.codecs import decode_flac, encode_flac
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio")
-        & (F.col("media_id") >= 200)
-        & (F.col("media_id") < 350)
+    def rows_for(m: int) -> list[dict]:
+        n = 1000 + m % 10 * 300
+        a, b = m % 50 * 10 - 250, m % 7 - 3
+        payload = encode_flac(a + b * np.arange(n, dtype=np.int64), 16000)
+        compressed = int(len(payload) < 2 * n + 44)
+        return [{**decode_flac(payload), "compressed": compressed}]
+
+    schema = _schema(
+        "media_id sample_rate n_samples sum_samples min_sample max_sample"
+        " compressed"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                n = 1000 + m % 10 * 300
-                a, b = m % 50 * 10 - 250, m % 7 - 3
-                sig = a + b * np.arange(n, dtype=np.int64)
-                payload = encode_flac(sig, 16000)
-                d = decode_flac(payload)
-                rows.append(
-                    (
-                        m, d["sample_rate"], d["n_samples"],
-                        d["sum_samples"], d["min_sample"], d["max_sample"],
-                        int(len(payload) < 2 * n + 44),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAC_DECODE_SCHEMA.fields]
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_FLAC_DECODE_SCHEMA)
-        .select(
-            "media_id", "sample_rate", "n_samples", "sum_samples",
-            "min_sample", "max_sample", "compressed",
-        )
-    )
-
-
-_FLAC_STEREO_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("channel_mode", T.StringType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_samples", T.LongType()),
-        T.StructField("min_sample", T.LongType()),
-        T.StructField("max_sample", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "audio", range(200, 350), schema, rows_for)
 
 
 @register(
@@ -2688,46 +1581,18 @@ def multimodal_flac_stereo_decode(
     the mode actually written."""
     from ..functions.codecs import decode_flac, encode_flac
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio")
-        & (F.col("media_id") >= 350)
-        & (F.col("media_id") < 500)
-    )
+    modes = ("independent", "left_side", "right_side", "mid_side")
 
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    def rows_for(m: int) -> list[dict]:
+        n = 800 + m % 9 * 250
+        a, b = m % 40 * 12 - 240, m % 7 - 3
+        a2, b2 = m % 30 * 9 - 130, m % 5 - 2
+        i = np.arange(n, dtype=np.int64)
+        sig = np.stack([a + b * i, a2 + b2 * i], axis=1)
+        return [decode_flac(encode_flac(sig, 16000, stereo_mode=modes[m % 4]))]
 
-        modes = ("independent", "left_side", "right_side", "mid_side")
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                n = 800 + m % 9 * 250
-                a, b = m % 40 * 12 - 240, m % 7 - 3
-                a2, b2 = m % 30 * 9 - 130, m % 5 - 2
-                i = np.arange(n, dtype=np.int64)
-                sig = np.stack([a + b * i, a2 + b2 * i], axis=1)
-                payload = encode_flac(sig, 16000, stereo_mode=modes[m % 4])
-                d = decode_flac(payload)
-                rows.append(
-                    (
-                        m, d["n_channels"], d["channel_mode"],
-                        d["n_samples"], d["sum_samples"],
-                        d["min_sample"], d["max_sample"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAC_STEREO_SCHEMA.fields]
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_FLAC_STEREO_SCHEMA)
-        .select(
-            "media_id", "n_channels", "channel_mode", "n_samples",
-            "sum_samples", "min_sample", "max_sample",
-        )
+    return _round_trip(
+        spark, sf_dir, "audio", range(350, 500), _FLAC_CHANNELS_SCHEMA, rows_for
     )
 
 
@@ -2769,195 +1634,17 @@ def multimodal_flac_multichannel_decode(
     on part of the fixture set."""
     from ..functions.codecs import decode_flac, encode_flac
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "audio")
-        & (F.col("media_id") >= 200)
-        & (F.col("media_id") < 350)
+    def rows_for(m: int) -> list[dict]:
+        C = m % 6 + 3
+        n = 900 + (m % 7) * 600
+        a, b, dc = m % 50 * 10 - 250, m % 9 - 4, m % 11 - 5
+        i = np.arange(n, dtype=np.int64)
+        sig = np.stack([a + c * dc + b * i for c in range(C)], axis=1)
+        return [decode_flac(encode_flac(sig, 16000))]
+
+    return _round_trip(
+        spark, sf_dir, "audio", range(200, 350), _FLAC_CHANNELS_SCHEMA, rows_for
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                C = m % 6 + 3
-                n = 900 + (m % 7) * 600
-                a, b, dc = m % 50 * 10 - 250, m % 9 - 4, m % 11 - 5
-                i = np.arange(n, dtype=np.int64)
-                sig = np.stack(
-                    [a + c * dc + b * i for c in range(C)], axis=1
-                )
-                d = decode_flac(encode_flac(sig, 16000))
-                rows.append(
-                    (
-                        m, d["n_channels"], d["channel_mode"],
-                        d["n_samples"], d["sum_samples"],
-                        d["min_sample"], d["max_sample"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _FLAC_STEREO_SCHEMA.fields]
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_FLAC_STEREO_SCHEMA)
-        .select(
-            "media_id", "n_channels", "channel_mode", "n_samples",
-            "sum_samples", "min_sample", "max_sample",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# TIFF (X5): strip-layout scans with None / PackBits / TIFF-LZW
-# ---------------------------------------------------------------------------
-
-_TIFF_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("compression", T.StringType()),
-        T.StructField("predictor", T.LongType()),
-        T.StructField("n_strips", T.LongType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-    ]
-)
-
-_TIFF_ROWS_PER_STRIP = 4
-
-
-def decode_tiffs(df: DataFrame) -> DataFrame:
-    """REAL TIFF decode over mapInPandas: IFD tag walk, per-strip
-    decompression (none / PackBits RLE / TIFF-LZW with the spec's
-    EarlyChange width rule) → dimensions, compression, strip count,
-    exact integer channel sums."""
-
-    from ..functions.codecs import decode_tiff
-
-    def batches(it: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                d = decode_tiff(bytes(payload))
-                rows.append(
-                    (
-                        mid, d["width"], d["height"], d["n_channels"],
-                        d["compression"], d["predictor"], d["n_strips"],
-                        d["sum_r"], d["sum_g"], d["sum_b"],
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _TIFF_DECODE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_TIFF_DECODE_SCHEMA)
-
-
-def synthesize_tiled_tiff_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side TIFF synthesis for the r8 layout extensions:
-    the gradient fixture written through ``encode_tiff_ext`` rotating
-    tiled-chunky / tiled-planar / strip-planar layouts, crossed with
-    the compression and predictor rotations. Tile dims are small and
-    deliberately non-divisors of the image dims, so edge-tile padding
-    and clipping run on most fixtures."""
-
-    from ..functions.codecs import encode_tiff_ext
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        comps = ("none", "packbits", "lzw")
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, (m % 4) * 3 + 4
-                r0, g0, b0 = m % 200, m % 220, m * 13 % 256
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[..., 0] = r0 + np.arange(w)[None, :]
-                px[..., 1] = g0 + np.arange(h)[:, None]
-                px[..., 2] = b0
-                lay = (m // 3) % 3
-                kw = dict(
-                    compression=comps[(m // 9) % 3],
-                    predictor=(m // 3) % 2 + 1,
-                )
-                if lay == 0:
-                    kw["tile"] = (m % 3 + 3, m % 5 + 2)
-                elif lay == 1:
-                    kw["tile"] = (m % 3 + 3, m % 5 + 2)
-                    kw["planar"] = True
-                else:
-                    kw["rows_per_strip"] = 4
-                    kw["planar"] = True
-                payloads.append(encode_tiff_ext(px, **kw))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
-
-
-_TIFF_TILED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("layout", T.StringType()),
-        T.StructField("planar", T.BooleanType()),
-        T.StructField("compression", T.StringType()),
-        T.StructField("predictor", T.LongType()),
-        T.StructField("n_segments", T.LongType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-    ]
-)
-
-
-def decode_tiled_tiffs(df: DataFrame) -> DataFrame:
-    """REAL tiled/planar TIFF decode over mapInPandas: IFD walk,
-    per-segment decompression, predictor inversion per stored row,
-    tile clipping, plane stacking → layout facts + exact sums."""
-
-    from ..functions.codecs import decode_tiff_meta, decode_tiff_pixels
-
-    def batches(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                b = bytes(payload)
-                meta = decode_tiff_meta(b)
-                px = decode_tiff_pixels(b).astype(np.int64)
-                rows.append(
-                    (
-                        mid, meta["width"], meta["height"],
-                        meta["layout"], meta["planar"],
-                        meta["compression"], meta["predictor"],
-                        len(meta["segments"]),
-                        int(px[..., 0].sum()), int(px[..., 1].sum()),
-                        int(px[..., 2].sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _TIFF_TILED_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(batches, schema=_TIFF_TILED_SCHEMA)
 
 
 @register(
@@ -3011,37 +1698,45 @@ def multimodal_tiff_tiled_decode(
     a tile placed at the wrong offset, a plane stacked in the wrong
     order, or a predictor inverted at image width instead of tile
     width each breaks exact equality."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_id") % 3 == 2) & (F.col("media_id") < 200)
-    )
-    decoded = decode_tiled_tiffs(synthesize_tiled_tiff_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        "layout",
-        "planar",
-        "compression",
-        F.col("predictor").cast("bigint"),
-        F.col("n_segments").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
+    from ..functions.codecs import (
+        decode_tiff_meta,
+        decode_tiff_pixels,
+        encode_tiff_ext,
     )
 
+    comps = ("none", "packbits", "lzw")
 
-_TIFF16_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("bits", T.LongType()),
-        T.StructField("layout", T.StringType()),
-        T.StructField("compression", T.StringType()),
-        T.StructField("predictor", T.LongType()),
-        T.StructField("sum_gray", T.LongType()),
-    ]
-)
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, (m % 4) * 3 + 4
+        px = np.empty((h, w, 3), np.uint8)
+        px[..., 0] = m % 200 + np.arange(w)
+        px[..., 1] = m % 220 + np.arange(h)[:, None]
+        px[..., 2] = m * 13 % 256
+        # layouts rotate tiled-chunky / tiled-planar / strip-planar;
+        # tile dims deliberately do not divide the image dims
+        lay = (m // 3) % 3
+        kw = dict(
+            compression=comps[(m // 9) % 3], predictor=(m // 3) % 2 + 1
+        )
+        if lay < 2:
+            kw["tile"] = (m % 3 + 3, m % 5 + 2)
+        else:
+            kw["rows_per_strip"] = 4
+        payload = encode_tiff_ext(px, planar=lay > 0, **kw)
+        meta = decode_tiff_meta(payload)
+        got = decode_tiff_pixels(payload).astype(np.int64)
+        return [{
+            **meta, "n_segments": len(meta["segments"]),
+            "sum_r": int(got[..., 0].sum()), "sum_g": int(got[..., 1].sum()),
+            "sum_b": int(got[..., 2].sum()),
+        }]
+
+    schema = _schema(
+        "media_id width height layout:string planar:boolean"
+        " compression:string predictor n_segments sum_r sum_g sum_b"
+    )
+    # the oracle's ids (doc_id % 3 = 2) are the video rows
+    return _round_trip(spark, sf_dir, "video", range(200), schema, rows_for)
 
 
 @register(
@@ -3077,72 +1772,35 @@ def multimodal_tiff16_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the §14 predictor (which wraps at 65,536 for 16-bit
     samples). A dropped high byte, a wrong-endian sample read, or an
     8-bit predictor wrap each breaks the closed-form sum."""
-    from ..functions.codecs import decode_tiff_meta, decode_tiff_pixels
-    from ..functions.codecs import encode_tiff_ext
-
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image")
-        & (F.col("media_id") >= 200)
-        & (F.col("media_id") < 350)
+    from ..functions.codecs import (
+        decode_tiff_meta,
+        decode_tiff_pixels,
+        encode_tiff_ext,
     )
 
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
+    comps = ("none", "packbits", "lzw")
 
-        comps = ("none", "packbits", "lzw")
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, (m % 4) * 3 + 4
-                b0 = (m % 100) * 500
-                px = (
-                    b0
-                    + 300 * np.arange(h, dtype=np.int64)[:, None]
-                    + np.arange(w, dtype=np.int64)[None, :]
-                ).astype(np.uint16)
-                kw = dict(
-                    compression=comps[(m // 9) % 3],
-                    predictor=(m // 3) % 2 + 1,
-                )
-                if m % 2:
-                    kw["tile"] = (m % 3 + 3, m % 5 + 2)
-                else:
-                    kw["rows_per_strip"] = 4
-                payload = encode_tiff_ext(px, **kw)
-                meta = decode_tiff_meta(payload)
-                got = decode_tiff_pixels(payload).astype(np.int64)
-                rows.append(
-                    (
-                        m, meta["width"], meta["height"], meta["bits"],
-                        meta["layout"], meta["compression"],
-                        meta["predictor"], int(got.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _TIFF16_SCHEMA.fields]
-            )
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, (m % 4) * 3 + 4
+        px = (
+            (m % 100) * 500
+            + 300 * np.arange(h, dtype=np.int64)[:, None]
+            + np.arange(w, dtype=np.int64)[None, :]
+        ).astype(np.uint16)
+        kw = dict(compression=comps[(m // 9) % 3], predictor=(m // 3) % 2 + 1)
+        if m % 2:
+            kw["tile"] = (m % 3 + 3, m % 5 + 2)
+        else:
+            kw["rows_per_strip"] = 4
+        payload = encode_tiff_ext(px, **kw)
+        got = decode_tiff_pixels(payload).astype(np.int64)
+        return [{**decode_tiff_meta(payload), "sum_gray": int(got.sum())}]
 
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_TIFF16_SCHEMA)
-        .select(*[f.name for f in _TIFF16_SCHEMA.fields])
+    schema = _schema(
+        "media_id width height bits layout:string compression:string"
+        " predictor sum_gray"
     )
-
-
-_TIFF_FLOAT_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("bits", T.LongType()),
-        T.StructField("compression", T.StringType()),
-        T.StructField("predictor", T.LongType()),
-        T.StructField("n_strips", T.LongType()),
-        T.StructField("sum_val", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "image", range(200, 350), schema, rows_for)
 
 
 @register(
@@ -3187,69 +1845,30 @@ def multimodal_tiff_float_decode(
         encode_tiff_float,
     )
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image")
-        & (F.col("media_id") >= 350)
-        & (F.col("media_id") < 500)
+    comps = ("none", "packbits", "lzw", "deflate")
+
+    def rows_for(m: int) -> list[dict]:
+        h, w = m % 4 * 2 + 6, m % 6 * 2 + 9
+        px = (
+            m % 50
+            + 3 * np.arange(h, dtype=np.int64)[:, None]
+            + 7 * np.arange(w, dtype=np.int64)[None, :]
+        ).astype(np.float32)
+        payload = encode_tiff_float(
+            px,
+            compression=comps[(m // 3) % 4],
+            predictor=(m // 3) % 2 * 2 + 1,
+            rows_per_strip=m % 5 + 3,
+        )
+        meta = decode_tiff_meta(payload)
+        got = decode_tiff_pixels(payload).astype(np.int64)
+        return [{**meta, "n_strips": len(meta["strips"]), "sum_val": int(got.sum())}]
+
+    schema = _schema(
+        "media_id width height bits compression:string predictor n_strips"
+        " sum_val"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        comps = ("none", "packbits", "lzw", "deflate")
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                h, w = m % 4 * 2 + 6, m % 6 * 2 + 9
-                b0 = m % 50
-                px = (
-                    b0
-                    + 3 * np.arange(h, dtype=np.int64)[:, None]
-                    + 7 * np.arange(w, dtype=np.int64)[None, :]
-                ).astype(np.float32)
-                payload = encode_tiff_float(
-                    px,
-                    compression=comps[(m // 3) % 4],
-                    predictor=(m // 3) % 2 * 2 + 1,
-                    rows_per_strip=m % 5 + 3,
-                )
-                meta = decode_tiff_meta(payload)
-                got = decode_tiff_pixels(payload)
-                rows.append(
-                    (
-                        m, meta["width"], meta["height"], meta["bits"],
-                        meta["compression"], meta["predictor"],
-                        len(meta["strips"]),
-                        int(got.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _TIFF_FLOAT_SCHEMA.fields]
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_TIFF_FLOAT_SCHEMA)
-        .select(*[f.name for f in _TIFF_FLOAT_SCHEMA.fields])
-    )
-
-
-_TIFF_FLOAT_EXT_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("layout", T.StringType()),
-        T.StructField("planar", T.LongType()),
-        T.StructField("compression", T.StringType()),
-        T.StructField("predictor", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("n_segments", T.LongType()),
-        T.StructField("sum_val", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "image", range(350, 500), schema, rows_for)
 
 
 @register(
@@ -3301,74 +1920,38 @@ def multimodal_tiff_float_tiled_decode(
         encode_tiff_ext,
     )
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image")
-        & (F.col("media_id") >= 200)
-        & (F.col("media_id") < 350)
+    comps = ("none", "packbits", "lzw", "deflate")
+
+    def rows_for(m: int) -> list[dict]:
+        k = m // 3
+        h, w = k % 5 * 3 + 7, k % 4 * 5 + 9
+        lay, tw = k % 3, (k // 2) % 2 * 8 + 8
+        px = (
+            m % 50
+            + 3 * np.arange(h, dtype=np.int64)[:, None, None]
+            + 7 * np.arange(w, dtype=np.int64)[None, :, None]
+            + 11 * np.arange(3, dtype=np.int64)[None, None, :]
+        ).astype(np.float32)
+        payload = encode_tiff_ext(
+            px,
+            compression=comps[(k // 3) % 4],
+            predictor=k % 2 * 2 + 1,
+            rows_per_strip=m % 5 + 3,
+            tile=(tw, 8) if lay in (0, 2) else None,
+            planar=lay in (1, 2),
+        )
+        meta = decode_tiff_meta(payload)
+        got = decode_tiff_pixels(payload).astype(np.int64)
+        return [{
+            **meta, "planar": int(meta["planar"]),
+            "n_segments": len(meta["segments"]), "sum_val": int(got.sum()),
+        }]
+
+    schema = _schema(
+        "media_id layout:string planar compression:string predictor width"
+        " height n_channels n_segments sum_val"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        comps = ("none", "packbits", "lzw", "deflate")
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                k = m // 3
-                h, w = k % 5 * 3 + 7, k % 4 * 5 + 9
-                b0, rps = m % 50, m % 5 + 3
-                lay, tw = k % 3, (k // 2) % 2 * 8 + 8
-                px = (
-                    b0
-                    + 3 * np.arange(h, dtype=np.int64)[:, None, None]
-                    + 7 * np.arange(w, dtype=np.int64)[None, :, None]
-                    + 11 * np.arange(3, dtype=np.int64)[None, None, :]
-                ).astype(np.float32)
-                payload = encode_tiff_ext(
-                    px,
-                    compression=comps[(k // 3) % 4],
-                    predictor=k % 2 * 2 + 1,
-                    rows_per_strip=rps,
-                    tile=(tw, 8) if lay in (0, 2) else None,
-                    planar=lay in (1, 2),
-                )
-                meta = decode_tiff_meta(payload)
-                got = decode_tiff_pixels(payload)
-                rows.append(
-                    (
-                        m, meta["layout"], int(meta["planar"]),
-                        meta["compression"], meta["predictor"],
-                        meta["width"], meta["height"],
-                        meta["n_channels"], len(meta["segments"]),
-                        int(got.astype(np.int64).sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[f.name for f in _TIFF_FLOAT_EXT_SCHEMA.fields],
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_TIFF_FLOAT_EXT_SCHEMA)
-        .select(*[f.name for f in _TIFF_FLOAT_EXT_SCHEMA.fields])
-    )
-
-
-_JPEG_CMYK_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("transform", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_channels", T.LongType()),
-        T.StructField("sum_c", T.LongType()),
-        T.StructField("sum_k", T.LongType()),
-        T.StructField("sum_r", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "image", range(200, 350), schema, rows_for)
 
 
 @register(
@@ -3414,89 +1997,26 @@ def multimodal_jpeg_cmyk_decode(
         encode_jpeg_cmyk,
     )
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image")
-        & (F.col("media_id") >= 500)
-        & (F.col("media_id") < 650)
+    def rows_for(m: int) -> list[dict]:
+        t = (m // 3) % 2 * 2
+        v, k = 2 * (m % 60) + 11, 2 * (m % 50) + 21
+        img = np.zeros((16, 16, 4), np.uint8)
+        for i in range(2):
+            for j in range(2):
+                d4 = 4 * i + 8 * j
+                img[8*i:8*i+8, 8*j:8*j+8, 0:3] = v + d4
+                img[8*i:8*i+8, 8*j:8*j+8, 3] = k + d4
+        payload = encode_jpeg_cmyk(img, transform=t)
+        px = decode_jpeg_pixels(payload).astype(np.int64)
+        return [{
+            **decode_jpeg(payload), "transform": t,
+            "sum_c": int(px[..., 0].sum()), "sum_k": int(px[..., 3].sum()),
+        }]
+
+    schema = _schema(
+        "media_id transform width height n_channels sum_c sum_k sum_r"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                t = (m // 3) % 2 * 2
-                v = 2 * (m % 60) + 11
-                k = 2 * (m % 50) + 21
-                img = np.zeros((16, 16, 4), np.uint8)
-                for i in range(2):
-                    for j in range(2):
-                        d4 = 4 * i + 8 * j
-                        img[8*i:8*i+8, 8*j:8*j+8, 0:3] = v + d4
-                        img[8*i:8*i+8, 8*j:8*j+8, 3] = k + d4
-                payload = encode_jpeg_cmyk(img, transform=t)
-                d = decode_jpeg(payload)
-                px = decode_jpeg_pixels(payload).astype(np.int64)
-                rows.append(
-                    (m, t, d["width"], d["height"], d["n_channels"],
-                     int(px[..., 0].sum()), int(px[..., 3].sum()),
-                     d["sum_r"])
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _JPEG_CMYK_SCHEMA.fields]
-            )
-
-    return (
-        ids.select("media_id")
-        .mapInPandas(gen, schema=_JPEG_CMYK_SCHEMA)
-        .select(*[f.name for f in _JPEG_CMYK_SCHEMA.fields])
-    )
-
-
-def synthesize_tiff_payloads(ids: DataFrame) -> DataFrame:
-    """Executor-side TIFF synthesis: the PNG gradient fixture written
-    through the strip-TIFF encoder, compression rotated over
-    none/PackBits/LZW by ``(id // 3) % 3`` (image ids are all
-    ``id % 3 == 0``, so rotating on the raw id would pin one codec)."""
-
-    from ..functions.codecs import encode_tiff
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        comps = ("none", "packbits", "lzw")
-        for pdf in it:
-            payloads = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = m % 8 * 4 + 5, m % 4 + 2
-                r0, g0, b0 = m % 200, m % 220, m * 13 % 256
-                px = np.empty((h, w, 3), dtype=np.uint8)
-                px[..., 0] = r0 + np.arange(w)[None, :]
-                px[..., 1] = g0 + np.arange(h)[:, None]
-                px[..., 2] = b0
-                payloads.append(
-                    encode_tiff(
-                        px,
-                        compression=comps[m // 3 % 3],
-                        rows_per_strip=_TIFF_ROWS_PER_STRIP,
-                        # §14 horizontal differencing on every other
-                        # fixture: crossed with the compression
-                        # rotation this covers the predictor×codec
-                        # matrix (LZW+predictor2 = the scanner-TIFF
-                        # default — VERDICT r6 #3)
-                        predictor=(m // 3) % 2 + 1,
-                    )
-                )
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "payload": payloads}
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_PAYLOAD_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(500, 650), schema, rows_for)
 
 
 @register(
@@ -3534,41 +2054,34 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictor assignments, and closed-form per-channel pixel sums —
     a desync in RLE, the LZW width schedule, or the per-row
     difference/cumsum inverse breaks exact equality."""
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    from ..functions.codecs import decode_tiff, encode_tiff
+
+    comps = ("none", "packbits", "lzw")
+
+    def rows_for(m: int) -> list[dict]:
+        w, h = m % 8 * 4 + 5, m % 4 + 2
+        px = np.empty((h, w, 3), np.uint8)
+        px[..., 0] = m % 200 + np.arange(w)
+        px[..., 1] = m % 220 + np.arange(h)[:, None]
+        px[..., 2] = m * 13 % 256
+        payload = encode_tiff(
+            px,
+            # image ids are all id % 3 == 0, so the rotations run on id // 3
+            compression=comps[m // 3 % 3],
+            rows_per_strip=4,
+            # §14 horizontal differencing on every other fixture:
+            # crossed with the compression rotation this covers the
+            # predictor×codec matrix (LZW+predictor2 = the scanner-TIFF
+            # default — VERDICT r6 #3)
+            predictor=(m // 3) % 2 + 1,
+        )
+        return [decode_tiff(payload)]
+
+    schema = _schema(
+        "media_id width height n_channels compression:string predictor"
+        " n_strips sum_r sum_g sum_b"
     )
-    decoded = decode_tiffs(synthesize_tiff_payloads(ids))
-    return decoded.select(
-        "media_id",
-        F.col("width").cast("bigint"),
-        F.col("height").cast("bigint"),
-        F.col("n_channels").cast("bigint"),
-        "compression",
-        F.col("predictor").cast("bigint"),
-        F.col("n_strips").cast("bigint"),
-        F.col("sum_r").cast("bigint"),
-        F.col("sum_g").cast("bigint"),
-        F.col("sum_b").cast("bigint"),
-    )
-
-
-# -- lossless WebP (VP8L) decode (X5, r11) -------------------------------
-
-_WEBP_DECODE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.LongType()),
-        T.StructField("height", T.LongType()),
-        T.StructField("n_pixels", T.LongType()),
-        T.StructField("transforms", T.StringType()),
-        T.StructField("cache_bits", T.LongType()),
-        T.StructField("sum_r", T.LongType()),
-        T.StructField("sum_g", T.LongType()),
-        T.StructField("sum_b", T.LongType()),
-        T.StructField("sum_a", T.LongType()),
-        T.StructField("col_weighted_r", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "image", range(200), schema, rows_for)
 
 
 @register(
@@ -3617,87 +2130,45 @@ def multimodal_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies or transform inverses scatter any column)."""
     from ..functions.codecs import decode_webp, encode_webp_vp8l
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image") & (F.col("media_id") < 200)
+    def rows_for(m: int) -> list[dict]:
+        w, h = (m % 7) * 4 + 6, (m % 5) * 3 + 4
+        split = w // 2 + (m // 3) % 3
+        v = (m // 3) % 6
+        px = np.zeros((h, w, 4), np.uint8)
+        px[:, :split] = ((m * 17) % 256, (m * 23) % 256, (m * 29) % 256, 255)
+        px[:, split:] = (
+            (m * 31) % 256, (m * 37) % 256, (m * 41) % 256, (m * 13) % 256,
+        )
+        kw = {}
+        if v == 1:
+            kw = {"cache_bits": 4}
+        elif v == 2:
+            kw = {"subtract_green": True}
+        elif v == 3:
+            kw = {"palette": True}
+        elif v == 4:
+            # alternate explicit single-mode and per-tile AUTO
+            # selection (heterogeneous predictor tiles, r11)
+            kw = {"predictor_mode": "auto" if (m // 6) % 2 else (m // 18) % 14}
+        elif v == 5:
+            # alternate explicit constant elements and per-tile
+            # AUTO search (heterogeneous color tiles, r11)
+            kw = {
+                "color_transform": (
+                    "auto" if (m // 6) % 2 else (
+                        (m * 3) % 256, (m * 5) % 256, (m * 7) % 256,
+                    )
+                ),
+                "cache_bits": 3,
+                "meta_bits": 2,
+            }
+        return [decode_webp(encode_webp_vp8l(px, **kw))]
+
+    schema = _schema(
+        "media_id width height n_pixels transforms:string cache_bits sum_r"
+        " sum_g sum_b sum_a col_weighted_r"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = (m % 7) * 4 + 6, (m % 5) * 3 + 4
-                split = w // 2 + (m // 3) % 3
-                v = (m // 3) % 6
-                ca = ((m * 17) % 256, (m * 23) % 256, (m * 29) % 256, 255)
-                cb = (
-                    (m * 31) % 256, (m * 37) % 256, (m * 41) % 256,
-                    (m * 13) % 256,
-                )
-                px = np.zeros((h, w, 4), np.uint8)
-                px[:, :split] = ca
-                px[:, split:] = cb
-                kw = {}
-                if v == 1:
-                    kw = {"cache_bits": 4}
-                elif v == 2:
-                    kw = {"subtract_green": True}
-                elif v == 3:
-                    kw = {"palette": True}
-                elif v == 4:
-                    # alternate explicit single-mode and per-tile AUTO
-                    # selection (heterogeneous predictor tiles, r11)
-                    kw = {
-                        "predictor_mode": (
-                            "auto" if (m // 6) % 2 else (m // 18) % 14
-                        )
-                    }
-                elif v == 5:
-                    # alternate explicit constant elements and per-tile
-                    # AUTO search (heterogeneous color tiles, r11)
-                    kw = {
-                        "color_transform": (
-                            "auto" if (m // 6) % 2 else (
-                                (m * 3) % 256, (m * 5) % 256, (m * 7) % 256,
-                            )
-                        ),
-                        "cache_bits": 3,
-                        "meta_bits": 2,
-                    }
-                d = decode_webp(encode_webp_vp8l(px, **kw))
-                rows.append((
-                    m, d["width"], d["height"], d["n_pixels"],
-                    d["transforms"], d["cache_bits"], d["sum_r"],
-                    d["sum_g"], d["sum_b"], d["sum_a"],
-                    d["col_weighted_r"],
-                ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _WEBP_DECODE_SCHEMA.fields]
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_WEBP_DECODE_SCHEMA)
-
-
-# -- ANIMATED WebP (VP8X/ANIM/ANMF) decode (X5, r11) ---------------------
-
-_WEBP_ANIM_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("canvas_w", T.LongType()),
-        T.StructField("canvas_h", T.LongType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("loop_count", T.LongType()),
-        T.StructField("total_duration_ms", T.LongType()),
-        T.StructField("disposed_frames", T.LongType()),
-        T.StructField("final_sum_r", T.LongType()),
-        T.StructField("final_sum_g", T.LongType()),
-        T.StructField("final_sum_b", T.LongType()),
-        T.StructField("first_sum_r", T.LongType()),
-    ]
-)
+    return _round_trip(spark, sf_dir, "image", range(200), schema, rows_for)
 
 
 @register(
@@ -3755,52 +2226,34 @@ def multimodal_webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     for cross-surface composition."""
     from ..functions.codecs import decode_webp_anim, encode_webp_anim
 
-    ids = media_manifest(spark, sf_dir).filter(
-        (F.col("media_type") == "image")
-        & (F.col("media_id") >= 350)
-        & (F.col("media_id") < 500)
+    def rows_for(m: int) -> list[dict]:
+        w, h = (m % 6) * 2 + 8, (m % 4) * 2 + 6
+        cA = ((m * 17) % 256, (m * 23) % 256, (m * 29) % 256, 255)
+        cB = ((m * 31) % 256, (m * 37) % 256, (m * 41) % 256, 255)
+        cC = ((m * 43) % 256, (m * 47) % 256, (m * 53) % 256, 255)
+        bg = ((m * 59) % 256, (m * 61) % 256, (m * 67) % 256, 255)
+        f0 = np.zeros((h, w, 4), np.uint8)
+        f0[:] = cA
+        f1 = np.zeros((h - 4, w - 4, 4), np.uint8)
+        f1[:] = cB
+        row = np.zeros((1, w, 4), np.uint8)
+        row[0, 0::2] = cC
+        frames = [
+            {"px": f0, "x": 0, "y": 0,
+             "duration_ms": m % 7 + 10, "blend": False},
+            {"px": f1, "x": 2, "y": 2,
+             "duration_ms": m % 5 + 20, "blend": True,
+             "dispose_bg": (m // 3) % 2 == 1,
+             "enc": {"predictor_mode": "auto"} if m % 2 else {}},
+            {"px": row, "x": 0, "y": 0,
+             "duration_ms": m % 3 + 30, "blend": True},
+        ]
+        return [decode_webp_anim(
+            encode_webp_anim(frames, w, h, bg_rgba=bg, loop=m % 5)
+        )]
+
+    schema = _schema(
+        "media_id canvas_w canvas_h n_frames loop_count total_duration_ms"
+        " disposed_frames final_sum_r final_sum_g final_sum_b first_sum_r"
     )
-
-    def gen(it: Iterator) -> Iterator:
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            rows = []
-            for mid in pdf["media_id"]:
-                m = int(mid)
-                w, h = (m % 6) * 2 + 8, (m % 4) * 2 + 6
-                cA = ((m * 17) % 256, (m * 23) % 256, (m * 29) % 256, 255)
-                cB = ((m * 31) % 256, (m * 37) % 256, (m * 41) % 256, 255)
-                cC = ((m * 43) % 256, (m * 47) % 256, (m * 53) % 256, 255)
-                bg = ((m * 59) % 256, (m * 61) % 256, (m * 67) % 256, 255)
-                f0 = np.zeros((h, w, 4), np.uint8)
-                f0[:] = cA
-                f1 = np.zeros((h - 4, w - 4, 4), np.uint8)
-                f1[:] = cB
-                row = np.zeros((1, w, 4), np.uint8)
-                row[0, 0::2] = cC
-                frames = [
-                    {"px": f0, "x": 0, "y": 0,
-                     "duration_ms": m % 7 + 10, "blend": False},
-                    {"px": f1, "x": 2, "y": 2,
-                     "duration_ms": m % 5 + 20, "blend": True,
-                     "dispose_bg": (m // 3) % 2 == 1,
-                     "enc": {"predictor_mode": "auto"} if m % 2 else {}},
-                    {"px": row, "x": 0, "y": 0,
-                     "duration_ms": m % 3 + 30, "blend": True},
-                ]
-                d = decode_webp_anim(
-                    encode_webp_anim(frames, w, h, bg_rgba=bg, loop=m % 5)
-                )
-                rows.append((
-                    m, d["canvas_w"], d["canvas_h"], d["n_frames"],
-                    d["loop_count"], d["total_duration_ms"],
-                    d["disposed_frames"], d["final_sum_r"],
-                    d["final_sum_g"], d["final_sum_b"], d["first_sum_r"],
-                ))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in _WEBP_ANIM_SCHEMA.fields]
-            )
-
-    return ids.select("media_id").mapInPandas(gen, schema=_WEBP_ANIM_SCHEMA)
+    return _round_trip(spark, sf_dir, "image", range(350, 500), schema, rows_for)

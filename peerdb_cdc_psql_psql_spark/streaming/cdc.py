@@ -994,8 +994,13 @@ def read_dead_letters(
     spark: SparkSession, mirror: Mirror, source_table: str, target_root: str
 ) -> DataFrame:
     """Raw quarantined events for a mirrored table (dead_letter=True):
-    original CDC_EVENT_SCHEMA rows, replayable after repair."""
+    original CDC_EVENT_SCHEMA rows, replayable after repair. Each event
+    appears once: foreachBatch is at-least-once, so a micro-batch
+    replayed after a crash appends its dead letters again, and the
+    read drops the copies by ``lsn`` (the event's unique id)."""
     tm = mirror.tables[source_table]
-    return spark.read.schema(CDC_EVENT_SCHEMA).parquet(
-        f"{target_root}/{tm.target_table}/dlq"
+    return (
+        spark.read.schema(CDC_EVENT_SCHEMA)
+        .parquet(f"{target_root}/{tm.target_table}/dlq")
+        .dropDuplicates(["lsn"])
     )

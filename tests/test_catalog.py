@@ -21,3 +21,18 @@ def test_schema_memo_follows_overwritten_fixture(spark, tmp_path):
     again = catalog.load(spark, sf_dir, "region")
     assert again.columns == ["r_regionkey", "r_name"]
     assert again.collect() == [(0, "AFRICA")]
+
+
+def test_load_repins_session_timezone_changed_mid_session(spark, sf_dir):
+    """The pin-once fast path still re-checks the session timezone: a
+    caller that switches it after the first load gets UTC back on the
+    next ``catalog.load`` (timestamp results depend on it)."""
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    try:
+        catalog.load(spark, sf_dir, "region")  # the session is pinned
+        spark.conf.set(key, "America/New_York")
+        catalog.load(spark, sf_dir, "region")
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, before)

@@ -704,6 +704,47 @@ def test_dead_letter_queue_quarantines_corrupt(spark, tmp_path):
     assert len(dlq) == 1 and dlq[0]["lsn"] == 2 and dlq[0]["after_json"] == '{broken'
 
 
+def test_replayed_batch_dead_letters_read_once(spark, tmp_path):
+    """foreachBatch is at-least-once: a micro-batch replayed after a
+    crash runs ``_merge_batch`` again and appends its dead letters a
+    second time. ``read_dead_letters`` still returns each quarantined
+    event once, and the replay leaves the target unchanged."""
+    import datetime as dt
+
+    from peerdb_cdc_psql_psql_spark.streaming.cdc import (
+        _merge_batch,
+        read_dead_letters,
+    )
+
+    base = dt.datetime(2024, 1, 1)
+    m = Mirror(
+        name="dlq_replay",
+        tables={
+            "orders": TableMapping("orders", "orders_cdc", DEMO_SCHEMAS["orders"], "id")
+        },
+        dead_letter=True,
+    )
+    batch = workload.events_df(spark, [
+        (1, base, "I", "orders", 1,
+         '{"id": 1, "order_date": "2024-01-02", "purchaser": 1, '
+         '"quantity": 5, "product_id": 1}'),
+        (2, base, "I", "orders", 2, '{broken'),
+        (3, base, "U", "orders", 3, 'not json'),
+    ])
+    tgt = str(tmp_path / "tgt")
+
+    _merge_batch(batch, m, tgt)
+    first = _collect_sorted(read_target(spark, m, "orders", tgt), DATA_COLS)
+    _merge_batch(batch, m, tgt)  # the replay
+
+    dlq = read_dead_letters(spark, m, "orders", tgt).collect()
+    assert sorted((r["lsn"], r["after_json"]) for r in dlq) == [
+        (2, "{broken"), (3, "not json"),
+    ]
+    assert _collect_sorted(read_target(spark, m, "orders", tgt), DATA_COLS) == first
+    assert [r[0] for r in first] == [1]
+
+
 def test_schema_evolution_additive(spark, tmp_path):
     """evolve_table_schema mid-stream: post-evolution events land the
     new column, pre-evolution rows surface it as null, and compaction

@@ -72,10 +72,13 @@ def test_bfs_known_graph_and_cache_release(spark, tmp_path):
         spark, str(tmp_path), {1: [1, 2], 2: [2, 3], 3: [3, 4], 4: [4, 5]}
     )
     spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    cached_before = cache_manager.cachedData().size()
     rows = {
         r["lvl"]: (r["n_nodes"], r["sum_nodes"])
         for r in graph_bfs_levels(spark, str(tmp_path)).collect()
     }
     assert rows == {0: (1, 1), 1: (1, 2), 2: (1, 3), 3: (1, 4)}
-    # nothing survives in the cache manager after the collect
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    # the fn leaves no cache entry behind: the cache manager holds as
+    # many entries after the collect as before the call
+    assert cache_manager.cachedData().size() == cached_before

@@ -40,15 +40,23 @@ def duck(oracle_sf_dir):
 
 @pytest.fixture(scope="module")
 def parity_results(spark, oracle_sf_dir) -> dict[str, list[str]]:
-    """name → problems for every oracle query, computed concurrently."""
+    """name → problems for every oracle query, computed concurrently.
+
+    Each pool thread opens its own DuckDB connection; all of them are
+    closed when the sweep ends. Trade-off under ``-x``: every query is
+    compared here, before the first parametrized test asserts, so a
+    mismatch stops the run only after the whole sweep (~95 s), not at
+    the failing query."""
     import threading
 
     local = threading.local()
+    opened = []
 
     def check(name: str) -> tuple[str, list[str]]:
         con = getattr(local, "con", None)
         if con is None:
             con = local.con = duckdb_connection(oracle_sf_dir)
+            opened.append(con)
         spark.sparkContext.setJobDescription(f"parity:{name}")
         q = REGISTRY[name]
         try:
@@ -58,8 +66,12 @@ def parity_results(spark, oracle_sf_dir) -> dict[str, list[str]]:
         except Exception as e:  # surface as a per-query problem
             return name, [f"exception: {e!r}"]
 
-    with ThreadPoolExecutor(max_workers=_POOL_WORKERS) as pool:
-        return dict(pool.map(check, _ORACLE_QUERIES))
+    try:
+        with ThreadPoolExecutor(max_workers=_POOL_WORKERS) as pool:
+            return dict(pool.map(check, _ORACLE_QUERIES))
+    finally:
+        for con in opened:
+            con.close()
 
 
 @pytest.mark.parametrize("name", _ORACLE_QUERIES)
