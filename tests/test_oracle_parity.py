@@ -45,8 +45,8 @@ def parity_results(spark, oracle_sf_dir) -> dict[str, list[str]]:
     Each pool thread opens its own DuckDB connection; all of them are
     closed when the sweep ends. Trade-off under ``-x``: every query is
     compared here, before the first parametrized test asserts, so a
-    mismatch stops the run only after the whole sweep (~95 s), not at
-    the failing query."""
+    mismatch stops the run only after the whole sweep, not at the
+    failing query."""
     import threading
 
     local = threading.local()
